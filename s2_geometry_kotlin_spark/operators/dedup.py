@@ -189,11 +189,13 @@ def _minhash_pairs_over(docs: DataFrame,
     hash over salted shingle md5s; pairs sharing any band bucket, with
     verified Jaccard.
 
-    Verification is CANDIDATE-ONLY: shingles are joined to the candidate
-    pairs (cand -> a-side shingles -> matching b-side shingles), so the
-    cost is O(candidate pairs x shingles/doc) — never the full sh x sh
-    all-pairs join the LSH exists to avoid.  tests/test_plan_shapes.py
-    asserts the physical plan has no shingle-only equi-join."""
+    Verification is CANDIDATE-ONLY: each candidate pair is joined by
+    doc id to the two documents' shingle-hash arrays (one row per doc,
+    xxhash64 of each shingle), and |A n B| is the size of the arrays'
+    intersection.  The join input is one row per candidate pair and one
+    per document — never the full sh x sh all-pairs join the LSH
+    exists to avoid.  tests/test_plan_shapes.py asserts the physical
+    plan has no shingle-only equi-join."""
     sh = _shingle_rows_of(docs).cache()
     # all band minima in ONE aggregation keyed doc_id: the per-band
     # salted md5s are computed map-side as N_BANDS columns and reduced

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -18,7 +20,9 @@ def _warm_session(spark: SparkSession) -> None:
     warmup touches no engine input and computes no query result (a
     range of 10k synthetic longs, written to noop and to a throwaway
     parquet): sessions at scale are long-lived, so per-query latency is
-    the honest quantity.  Disable with S2_SESSION_WARMUP=0."""
+    the honest quantity.  The throwaway parquet is keyed by application
+    id, so two sessions on one host never share it, and removed after
+    the warmup.  Disable with S2_SESSION_WARMUP=0."""
     app = spark.sparkContext.applicationId
     if app in _WARMED:
         return
@@ -29,10 +33,13 @@ def _warm_session(spark: SparkSession) -> None:
     df = spark.range(0, 10000, 1, 8).select(
         (F.col("id") % 97).cast("string").alias("s"), "id")
     df.repartition(8).write.format("noop").mode("overwrite").save()
-    path = "/tmp/s2_session_warm_pq"
-    df.limit(100).write.mode("overwrite").parquet(path)
-    (spark.read.parquet(path).select(F.length("s"))
-     .write.format("noop").mode("overwrite").save())
+    path = os.path.join(tempfile.gettempdir(), f"s2_session_warm_{app}")
+    try:
+        df.limit(100).write.mode("overwrite").parquet(path)
+        (spark.read.parquet(path).select(F.length("s"))
+         .write.format("noop").mode("overwrite").save())
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def get_spark(app: str = "s2-engine", cpus: int | None = None,
