@@ -227,53 +227,12 @@ def cell_parent(cell: Column, level: int) -> Column:
         f"cell_l{level}")
 
 
-def cell_range_min(cell: Column, level: int) -> Column:
-    lsb = 1 << (2 * (MAX_LEVEL - level))
-    return cell - F.lit(lsb - 1)
-
-
-def cell_range_max(cell: Column, level: int) -> Column:
-    lsb = 1 << (2 * (MAX_LEVEL - level))
-    return cell + F.lit(lsb - 1)
-
-
-def cell_level(cell: Column) -> Column:
-    """level = 30 - trailing_zeros/2, via bit_count(lsb-1)."""
-    lsb = cell.bitwiseAND(-cell)
-    return (F.lit(MAX_LEVEL) -
-            F.shiftright(F.bit_count(lsb - F.lit(1)), 1)).cast("int")
-
-
-def cell_range_min_dyn(cell: Column) -> Column:
-    """range_min for ids of mixed level."""
-    lsb = cell.bitwiseAND(-cell)
-    return cell - (lsb - F.lit(1))
-
-
-def cell_range_max_dyn(cell: Column) -> Column:
-    lsb = cell.bitwiseAND(-cell)
-    return cell + (lsb - F.lit(1))
-
-
-def s2_snap_to_cell_center(lat: Column, lon: Column, level: int) -> Column:
-    """B2: S2CellIdSnapFunction — snap a point to its level-`level` cell
-    center (builder/snap/S2CellIdSnapFunction.kt); returns struct
-    (lat, lon)."""
-    return s2_cell_center(cell_parent(s2_cellid(lat, lon), level))
-
-
-def snap_int_latlng(lat: Column, lon: Column,
-                    exponent: int = 7) -> tuple[Column, Column]:
-    """B2: IntLatLngSnapFunction — snap to the 10^-exponent degree grid
-    (builder/snap/IntLatLngSnapFunction.kt, E5/E6/E7 encodings).  Pure
-    Columns; exponent 7 is the reference default precision."""
-    scale = F.lit(float(10 ** exponent))
-    return (F.round(lat * scale) / scale, F.round(lon * scale) / scale)
-
-
-def snap_identity(lat: Column, lon: Column) -> tuple[Column, Column]:
-    """B2: IdentitySnapFunction (no snapping, zero snap radius)."""
-    return lat, lon
+def ancestors_at(levels, cell_col: str) -> Column:
+    """Array of `cell_col`'s ancestors at each of `levels`, ascending:
+    one probe key per covering level for the ancestor-equality joins
+    (valid where the cell is at least as fine as every level)."""
+    return F.array(*[cell_parent(F.col(cell_col), lv).cast("long")
+                     for lv in sorted(levels)])
 
 
 # ---------------------------------------------------------------------------

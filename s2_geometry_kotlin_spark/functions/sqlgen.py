@@ -213,16 +213,6 @@ def parent_sql(cell_id: str, level: int) -> str:
     return f"(({cell_id} & CAST({smask} AS BIGINT)) | {lsb})"
 
 
-def range_min_sql(cell_id: str, level: int) -> str:
-    lsb = 1 << (2 * (MAX_LEVEL - level))
-    return f"({cell_id} - {lsb - 1})"
-
-
-def range_max_sql(cell_id: str, level: int) -> str:
-    lsb = 1 << (2 * (MAX_LEVEL - level))
-    return f"({cell_id} + {lsb - 1})"
-
-
 def token_sql(cell_id: str) -> str:
     """Hex token with trailing zeros stripped (S2CellId.kt:638-654)."""
     return (f"CASE WHEN {cell_id} = 0 THEN 'X' ELSE "
@@ -375,9 +365,3 @@ withinjoin AS (
                 WHERE pj.url = e.url AND pj.polygon_id = e.polygon_id)
 )"""
 
-
-def chord_dist2_sql(x1: str, y1: str, z1: str,
-                    x2: str, y2: str, z2: str) -> str:
-    """Squared chord length min(4, |a-b|^2) (S1ChordAngle.kt:48-75)."""
-    return (f"least(4.0, ({x1}-{x2})*({x1}-{x2}) + ({y1}-{y2})*({y1}-{y2})"
-            f" + ({z1}-{z2})*({z1}-{z2}))")

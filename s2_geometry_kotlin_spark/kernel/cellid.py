@@ -352,13 +352,6 @@ def end(lvl) -> np.ndarray:
     return child_end(from_face(5), lvl)
 
 
-def child_position(ids, lvl) -> np.ndarray:
-    """Child position [0..3] of this cell's ancestor at level lvl (>=1)."""
-    ids = _as_u64(ids)
-    shift = (2 * (MAX_LEVEL - np.asarray(lvl, dtype=np.int64)) + 1).astype(np.uint64)
-    return ((ids >> shift) & _THREE).astype(np.int64)
-
-
 def common_ancestor_level(a, b) -> np.ndarray:
     """S2CellId.getCommonAncestorLevel — -1 if none."""
     a, b = _as_u64(a), _as_u64(b)

@@ -7,12 +7,17 @@ largest cells first, fewest intersecting children, fewest terminals.
 
 Runs driver-side (or inside an applyInPandas over a polygon layer) —
 coverings are computed once per layer geometry, then exploded/broadcast.
+Every operator keeps its coverings in the one bounded memo below
+(`memoized`), keyed by the `content_key` of its layer.
 """
 
 from __future__ import annotations
 
+import hashlib
 import heapq
 import math
+import threading
+from collections import OrderedDict
 
 import numpy as np
 
@@ -267,7 +272,58 @@ class RegionCoverer:
 
 
 # ---------------------------------------------------------------------------
-# cell-union helpers (U1, U2) as plain-int list ops
+# driver-side covering memo
+# ---------------------------------------------------------------------------
+
+# Operators memoize deterministic driver-side constants across calls:
+# coverings (0.3-14 s of pure-Python coverer walk each) and the IVF
+# centroids.  A long-lived driver sees many layers and query batches,
+# so the memo keeps only the most recently used ones.
+MEMO_ENTRIES = 64
+_MEMO: OrderedDict = OrderedDict()
+_MEMO_LOCK = threading.Lock()
+
+
+def content_key(items) -> str:
+    """Stable digest of a driver-side layer: rows of ids/numbers and
+    shapes (Polygon loops with their complement bit, Polyline
+    vertices).  Content, not id(): ids are reused after garbage
+    collection."""
+    h = hashlib.sha256()
+    for item in items:
+        for v in item:
+            if hasattr(v, "loops"):
+                h.update(f"P{len(v.loops)}|{v.inverted}|".encode())
+                arrays = [lp.vertices for lp in v.loops]
+            elif hasattr(v, "vertices"):
+                h.update(b"L|")
+                arrays = [v.vertices]
+            else:
+                h.update(f"{v!r}|".encode())
+                continue
+            for a in arrays:
+                h.update(f"{len(a)}|".encode())
+                h.update(np.ascontiguousarray(a).tobytes())
+    return h.hexdigest()
+
+
+def memoized(key, compute):
+    """compute() once per hashable key; the MEMO_ENTRIES most recently
+    used results are kept.  A hit returns the same object."""
+    with _MEMO_LOCK:
+        if key in _MEMO:
+            _MEMO.move_to_end(key)
+            return _MEMO[key]
+    rows = compute()
+    with _MEMO_LOCK:
+        _MEMO[key] = rows
+        while len(_MEMO) > MEMO_ENTRIES:
+            _MEMO.popitem(last=False)
+    return rows
+
+
+# ---------------------------------------------------------------------------
+# cell-union helpers (U1, U2, U8) as plain-int list ops
 # ---------------------------------------------------------------------------
 
 def _ukey(cid: int) -> int:
@@ -313,6 +369,26 @@ def normalize(cells: list[int]) -> list[int]:
                 break
         out.append(cid)
     return out
+
+
+def expand(cells: list[int], level: int | None = None,
+           radius_rad: float | None = None) -> list[int]:
+    """U8 (S2CellUnion.expand, S2CellUnion.kt:307-350): snap every cell
+    finer than the expand level to its ancestor there, add all its
+    neighbors at that level, normalize.
+
+    Pass `level`, or `radius_rad` for expand(minRadius, maxLevelDiff=4):
+    the level whose kMinWidth covers the radius, but never more than 4
+    levels finer than the coarsest cell (bounds the output size)."""
+    if level is None:
+        level = min(min(ck.sc_level(c) for c in cells) + 4,
+                    metrics.MIN_WIDTH.get_level_for_min_value(radius_rad))
+    out = set()
+    for cid in cells:
+        base = ck.sc_parent(cid, level) if ck.sc_level(cid) > level else cid
+        out.add(base)
+        out.update(ck.get_all_neighbors(base, level))
+    return normalize(list(out))
 
 
 def _are_siblings(a: int, b: int, c: int, d: int) -> bool:

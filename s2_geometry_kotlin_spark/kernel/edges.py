@@ -19,11 +19,6 @@ from . import cellid as ck
 from .distance import point_edge_chord2
 
 
-def _norm_rows(v: np.ndarray) -> np.ndarray:
-    n = np.sqrt(np.einsum("ij,ij->i", v, v))
-    return v / n[:, None]
-
-
 def point_edge_chord2_pairwise(p: np.ndarray, a: np.ndarray,
                                b: np.ndarray) -> np.ndarray:
     """Paired min squared-chord distance: p[i] to edge (a[i], b[i]).

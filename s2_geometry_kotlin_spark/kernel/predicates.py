@@ -74,10 +74,6 @@ def _stable_sign(a, b, c) -> int:
     return 1 if det > 0 else -1
 
 
-def _frac_vec(p) -> tuple[Fraction, Fraction, Fraction]:
-    return (Fraction(float(p[0])), Fraction(float(p[1])), Fraction(float(p[2])))
-
-
 def _frac_cross(u, v):
     return (u[1] * v[2] - u[2] * v[1],
             u[2] * v[0] - u[0] * v[2],

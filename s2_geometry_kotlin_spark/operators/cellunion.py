@@ -8,7 +8,7 @@ are pure Spark SQL on the signed int64 bit patterns:
   (range_min, range_max) = id -/+ (lsb-1) — no UDF,
 - union is unionByName + per-geometry normalize (applyInPandas over the
   numpy kernel only for the sibling-merge, which SQL can't express),
-- area/leaf-count are aggregates over level bit math.
+- leaf counts are aggregates over level bit math.
 
 At scale these are map-side-partial aggregates and broadcast range
 joins; nothing shuffles the big side except groupBy(geom) for normalize.
@@ -21,9 +21,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel import cellid as ck
+from ..functions import cell_parent
 from ..kernel.coverer import denormalize as _denormalize_list
 from ..kernel.coverer import difference as _difference_list
+from ..kernel.coverer import expand as _expand_list
 from ..kernel.coverer import normalize as _normalize_list
 
 
@@ -72,9 +73,7 @@ def contains_cell_join(cells: DataFrame, probes: DataFrame,
     probe_level = level_col(F.col(probe_cell))
     parents = F.array(*[
         F.when(probe_level >= F.lit(lv),
-               (F.col(probe_cell).bitwiseAND(
-                   F.lit(~(2 * (1 << (2 * (30 - lv))) - 1)))
-                .bitwiseOR(F.lit(1 << (2 * (30 - lv))))).cast("long"))
+               cell_parent(F.col(probe_cell), lv).cast("long"))
         for lv in sorted(levels)
     ])
     probe = probes.withColumn("__probe", F.explode(parents)) \
@@ -83,11 +82,6 @@ def contains_cell_join(cells: DataFrame, probes: DataFrame,
         F.broadcast(cells.select(F.col("cell_id").alias("__probe"),
                                  "geom_id")),
         "__probe", "left_semi").drop("__probe")
-
-
-def union_normalized(a: DataFrame, b: DataFrame) -> DataFrame:
-    """U4: union of two (geom_id, cell_id) unions, re-normalized."""
-    return normalize_df(a.unionByName(b))
 
 
 def normalize_df(cells: DataFrame) -> DataFrame:
@@ -155,49 +149,13 @@ def difference_df(a: DataFrame, b: DataFrame,
             .applyInPandas(_diff, "geom_id long, cell_id long"))
 
 
-def union_area_stats(cells: DataFrame) -> DataFrame:
-    """U9 area aggregates per geometry (S2CellUnion.kt:354-402):
-    leaf_cells_covered (exact, BIGINT), average-based area (steradians =
-    leaves x leaf avg area), and approx area via per-cell approxArea
-    (S2Cell.kt:213-235) computed in an Arrow batch."""
-    from ..kernel import metrics
-    leaf_area = metrics.AVG_AREA.get_value(30)
-    width = (range_max_col(F.col("cell_id")) -
-             range_min_col(F.col("cell_id"))) / F.lit(2) + F.lit(1)
-
-    @F.pandas_udf("double")
-    def approx_area(cell_id: pd.Series) -> pd.Series:
-        return pd.Series([ck.cell_approx_area(u) for u in
-                          _unsigned(cell_id.tolist())])
-
-    return (cells
-            .withColumn("__leaves", width.cast("long"))
-            .withColumn("__approx", approx_area(F.col("cell_id")))
-            .groupBy("geom_id")
-            .agg(F.sum("__leaves").alias("n_leaves"),
-                 (F.sum("__leaves") * F.lit(leaf_area))
-                 .alias("avg_based_area_sr"),
-                 F.sum("__approx").alias("approx_area_sr")))
-
-
 def expand_union(cells: DataFrame, expand_level: int) -> DataFrame:
     """U8: add all neighbors at expand_level (S2CellUnion.kt:307-350) —
     buffered coverings for 'within distance d' joins."""
     def _expand(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = set()
-        for signed in pdf["cell_id"].tolist():
-            cid = signed + (1 << 64) if signed < 0 else signed
-            lvl = ck.sc_level(cid)
-            # finer cells snap to their expand_level ancestor; neighbors
-            # are always generated at expand_level (S2CellUnion.kt:307-325)
-            base = ck.sc_parent(cid, expand_level) \
-                if lvl > expand_level else cid
-            out.add(base)
-            for nbr in ck.get_all_neighbors(base, expand_level):
-                out.add(nbr)
-        norm = _normalize_list(sorted(out))
-        signed = [u - (1 << 64) if u >= (1 << 63) else u for u in norm]
+        out = _expand_list(_unsigned(pdf["cell_id"].tolist()),
+                           level=expand_level)
         return pd.DataFrame({"geom_id": pdf["geom_id"].iloc[0],
-                             "cell_id": signed})
+                             "cell_id": _signed_list(out)})
     return (cells.groupBy("geom_id")
             .applyInPandas(_expand, "geom_id long, cell_id long"))

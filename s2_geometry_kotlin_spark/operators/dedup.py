@@ -314,12 +314,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_simhash_sql("div"))
 
 
-def simhash_sql() -> str:
-    return (f"WITH words AS (SELECT doc_id, "
-            f"unnest(string_split_regex(trim(text), ' +')) AS word "
-            f"FROM documents)\n" + _simhash_sql("//"))
-
-
 def q_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: banded bucket join (4 x 8-bit bands) then
     exact Hamming verify <= 3.  By pigeonhole the band join finds EVERY

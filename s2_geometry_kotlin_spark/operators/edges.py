@@ -32,9 +32,10 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import ancestors_at
 from ..kernel import cellid as ck
 from ..kernel import distance as dist
-from ..kernel.coverer import RegionCoverer
+from ..kernel.coverer import RegionCoverer, content_key, memoized
 from ..kernel.regions import Cap, Polygon
 
 # dialect-neutral SQL: min squared-chord distance from unit vector
@@ -108,51 +109,39 @@ def edge_table(spark: SparkSession,
     return spark.createDataFrame(polygon_edge_rows(polygons), EDGE_SCHEMA)
 
 
-_EDGE_COV_CACHE: dict = {}
-
-
 def edge_covering_rows(polygons: list[tuple[str, int, Polygon]],
                        radius_rad: float) -> list:
-    """(polygon_id, edge_id, cell_id, level): per-edge buffered covering
+    """(polygon_id, edge_id, level, cell_id): per-edge buffered covering
     — the cap around the edge expanded by radius_rad covers every point
     within radius_rad of the edge (triangle inequality), level_mod=2
-    caps the number of distinct levels the probe side must explode."""
-    from .spatial_join import _layer_digest
-    key = (_layer_digest(polygons), round(radius_rad, 12))
-    if key in _EDGE_COV_CACHE:
-        return _EDGE_COV_CACHE[key]
-    coverer = RegionCoverer(max_cells=8, level_mod=2)
-    rows = []
-    for layer, pid, poly in polygons:
-        eid = 0
-        for lp in poly.loops:
-            verts = lp.vertices
-            n = len(verts)
-            for i in range(n):
-                c = verts[i]
-                d = verts[(i + 1) % n]
-                mid = c + d
-                mid = mid / np.linalg.norm(mid)
-                half = 0.5 * 2.0 * math.asin(
-                    0.5 * min(2.0, float(np.linalg.norm(d - c))))
-                r2 = float(dist.radians_to_chord2(
-                    min(math.pi, half + radius_rad)))
-                for cid in coverer.get_covering(Cap(mid, r2)):
-                    rows.append((pid, eid, ck.sc_level(cid),
-                                 cid - (1 << 64) if cid >= (1 << 63)
-                                 else cid))
-                eid += 1
-    _EDGE_COV_CACHE[key] = rows
-    return rows
+    caps the number of distinct levels the probe side must explode.
+    Kept in the shared bounded covering memo."""
+    def compute():
+        coverer = RegionCoverer(max_cells=8, level_mod=2)
+        rows = []
+        for layer, pid, poly in polygons:
+            eid = 0
+            for lp in poly.loops:
+                verts = lp.vertices
+                n = len(verts)
+                for i in range(n):
+                    c = verts[i]
+                    d = verts[(i + 1) % n]
+                    mid = c + d
+                    mid = mid / np.linalg.norm(mid)
+                    half = 0.5 * 2.0 * math.asin(
+                        0.5 * min(2.0, float(np.linalg.norm(d - c))))
+                    r2 = float(dist.radians_to_chord2(
+                        min(math.pi, half + radius_rad)))
+                    for cid in coverer.get_covering(Cap(mid, r2)):
+                        rows.append((pid, eid, ck.sc_level(cid),
+                                     cid - (1 << 64) if cid >= (1 << 63)
+                                     else cid))
+                    eid += 1
+        return rows
 
-
-def _ancestors_at(levels: list[int], cell_col: str):
-    return F.array(*[
-        (F.col(cell_col).bitwiseAND(
-            F.lit(~(2 * (1 << (2 * (30 - lv))) - 1)))
-         .bitwiseOR(F.lit(1 << (2 * (30 - lv))))).cast("long")
-        for lv in sorted(levels)
-    ])
+    return memoized(("edge", content_key(polygons), round(radius_rad, 12)),
+                    compute)
 
 
 def knn_edges(pages: DataFrame, spark: SparkSession,
@@ -192,9 +181,9 @@ def knn_edges(pages: DataFrame, spark: SparkSession,
         rows = edge_covering_rows(polygons, radius)
         cov = spark.createDataFrame(
             rows, "polygon_id long, edge_id long, level int, probe_cell long")
-        levels = sorted({r[2] for r in rows})
         probe = remaining.withColumn(
-            "probe_cell", F.explode(_ancestors_at(levels, "cell_id")))
+            "probe_cell",
+            F.explode(ancestors_at({r[2] for r in rows}, "cell_id")))
         # normalized covering cells are disjoint per edge -> at most one
         # match per (page, edge); join keeps polygon_id/edge_id keys
         cand = probe.join(cov.select("probe_cell", "polygon_id",

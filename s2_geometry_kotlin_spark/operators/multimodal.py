@@ -161,52 +161,6 @@ _MEDIA_SQL = (f"SELECT doc_id AS media_id, "
               f"AS s FROM documents")
 
 
-def q_media_frames(spark, sf_dir: str) -> DataFrame:
-    """Frame sampling through mapInPandas: (media_id, offset,
-    frame_md5) — blob-free downstream."""
-    return frame_sample(_doc_media(spark, sf_dir),
-                        every_n_bytes=FRAME_BYTES)
-
-
-def media_frames_sql() -> str:
-    return f"""WITH media AS ({_MEDIA_SQL}),
-offs AS (
-  SELECT media_id, s, unnest(range(0, length(s), {FRAME_BYTES})) AS o
-  FROM media
-)
-SELECT media_id, CAST(o AS BIGINT) AS offset,
-       md5(substr(s, CAST(o + 1 AS INT), {FRAME_BYTES})) AS frame_md5
-FROM offs"""
-
-
-def q_media_features(spark, sf_dir: str) -> DataFrame:
-    """Decode + feature extraction through mapInPandas; intensity
-    moments rounded for cross-engine float comparison (phash64 is
-    int64-signed md5 prefix — not SQL-expressible, checked in unit
-    tests against synth_media)."""
-    from pyspark.sql import functions as F
-    feats = extract_features(_doc_media(spark, sf_dir))
-    return feats.select(
-        "media_id", "n_bytes",
-        F.round("mean_intensity", 9).alias("mean_intensity"),
-        F.round("std_intensity", 9).alias("std_intensity"))
-
-
-def media_features_sql() -> str:
-    return f"""WITH media AS ({_MEDIA_SQL}),
-bytes AS (
-  SELECT media_id, length(s) AS n_bytes,
-         unnest(range(1, length(s) + 1)) AS i, s
-  FROM media
-)
-SELECT media_id, CAST(n_bytes AS BIGINT) AS n_bytes,
-       ROUND(AVG(ascii(substr(s, CAST(i AS INT), 1))), 9)
-         AS mean_intensity,
-       ROUND(STDDEV_POP(ascii(substr(s, CAST(i AS INT), 1))), 9)
-         AS std_intensity
-FROM bytes GROUP BY 1, 2"""
-
-
 def q_media_pipeline(spark, sf_dir: str) -> DataFrame:
     """Board-consolidated frames + features (round 6: the former
     media_frames and media_features rows merged so the registry fits

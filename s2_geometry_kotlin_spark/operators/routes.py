@@ -27,13 +27,14 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import ancestors_at
 from ..kernel import cellid as ck
 from ..kernel import distance as dist
-from ..kernel import metrics
-from ..kernel.coverer import RegionCoverer
-from ..kernel.coverer import normalize as _norm
+from ..kernel.coverer import RegionCoverer, content_key, expand, memoized
 from ..kernel.polyline import Polyline
-from .edges import EDGE_D2_SQL, _EDGE_FIELDS, edge_constants
+from ..kernel.regions import Cap
+from .edges import (EDGE_D2_SQL, _EDGE_FIELDS, edge_constants,
+                    edge_covering_rows)
 
 # deterministic fixture routes over the hot cities (sources/pages.CITIES)
 _ROUTE_POINTS = [
@@ -69,52 +70,27 @@ def route_edge_rows(routes: list[tuple[int, Polyline]]) -> list:
     return rows
 
 
-_ROUTE_COV_CACHE: dict = {}
-
-
-def _routes_digest(routes: list[tuple[int, Polyline]]) -> str:
-    """Stable content key over route ids + vertex bytes (mirrors
-    spatial_join._layer_digest)."""
-    import hashlib
-    h = hashlib.sha256()
-    for rid, line in routes:
-        h.update(str(rid).encode())
-        h.update(np.ascontiguousarray(line.vertices).tobytes())
-    return h.hexdigest()
-
-
 def buffered_route_covering(routes: list[tuple[int, Polyline]],
                             radius_rad: float,
                             max_cells: int = 32) -> list:
-    """(route_id, cell_id, level): covering of each polyline expanded by
-    radius (S2CellUnion.expand semantics — snap to the radius level
-    capped at min_level+4, add all neighbors, normalize).
+    """(route_id, level, cell_id): covering of each polyline expanded by
+    radius (kernel.coverer.expand).
 
-    Memoized per (routes, radius, max_cells): the driver-side coverer
-    walk costs 0.3-0.6 s per call (pure Python) and was re-run inside
-    every timed query invocation — the same deterministic-constant
-    memoization build_covering_rows already had."""
-    key = (_routes_digest(routes), radius_rad, max_cells)
-    if key in _ROUTE_COV_CACHE:
-        return _ROUTE_COV_CACHE[key]
-    coverer = RegionCoverer(max_cells=max_cells)
-    radius_level = metrics.MIN_WIDTH.get_level_for_min_value(radius_rad)
-    rows = []
-    for rid, line in routes:
-        cov = coverer.get_covering(line)
-        min_level = min(ck.sc_level(c) for c in cov)
-        expand_level = min(min_level + 4, radius_level)
-        out = set()
-        for cid in cov:
-            base = ck.sc_parent(cid, expand_level) \
-                if ck.sc_level(cid) > expand_level else cid
-            out.add(base)
-            out.update(ck.get_all_neighbors(base, expand_level))
-        for cid in _norm(sorted(out)):
-            rows.append((rid, ck.sc_level(cid),
-                         cid - (1 << 64) if cid >= (1 << 63) else cid))
-    _ROUTE_COV_CACHE[key] = rows
-    return rows
+    Kept in the shared bounded covering memo: the driver-side coverer
+    walk costs 0.3-0.6 s per call (pure Python) and would otherwise
+    re-run inside every timed query invocation."""
+    def compute():
+        coverer = RegionCoverer(max_cells=max_cells)
+        rows = []
+        for rid, line in routes:
+            for cid in expand(coverer.get_covering(line),
+                              radius_rad=radius_rad):
+                rows.append((rid, ck.sc_level(cid),
+                             cid - (1 << 64) if cid >= (1 << 63) else cid))
+        return rows
+
+    return memoized(("route", content_key(routes), radius_rad, max_cells),
+                    compute)
 
 
 def _edges_array_df(spark: SparkSession,
@@ -165,13 +141,12 @@ def _prejoin_candidates(pages: DataFrame, spark: SparkSession,
     rows = buffered_route_covering(routes, radius_rad, max_cells=64)
     cov = spark.createDataFrame(
         rows, "route_id long, level int, probe_cell long")
-    levels = sorted({r[1] for r in rows})
-    from .edges import _ancestors_at
+    levels = {r[1] for r in rows}
     x, y, z = s2f.xyz_cols("lat", "lon")
     probe = (pages.select("url", "cell_id", x.alias("x"), y.alias("y"),
                           z.alias("z"))
              .withColumn("probe_cell",
-                         F.explode(_ancestors_at(levels, "cell_id"))))
+                         F.explode(ancestors_at(levels, "cell_id"))))
     return probe.join(F.broadcast(cov.select("probe_cell", "route_id")),
                       "probe_cell", "inner")
 
@@ -302,22 +277,17 @@ def crossing_edges_indexed(spark: SparkSession,
 
     Here both sides are driver-size layers; at scale either side can be
     a parquet-backed edge table with the identical plan."""
-    from .edges import _ancestors_at, edge_covering_rows
-
     # query-side: route edges with covering cells (radius 0)
     q_cov = []
     for rid, line in routes:
         v = line.vertices
-        from ..kernel.coverer import RegionCoverer
-        from ..kernel.regions import Cap
-        import math as _m
         coverer = RegionCoverer(max_cells=8, level_mod=2)
         for i in range(len(v) - 1):
             mid = v[i] + v[i + 1]
             mid = mid / np.linalg.norm(mid)
-            half = _m.asin(0.5 * min(
+            half = math.asin(0.5 * min(
                 2.0, float(np.linalg.norm(v[i + 1] - v[i]))))
-            r2 = float(dist.radians_to_chord2(min(_m.pi, half * 1.01)))
+            r2 = float(dist.radians_to_chord2(min(math.pi, half * 1.01)))
             for cid in coverer.get_covering(Cap(mid, r2)):
                 q_cov.append((rid, i, ck.sc_level(cid),
                               cid - (1 << 64) if cid >= (1 << 63) else cid))
@@ -329,14 +299,14 @@ def crossing_edges_indexed(spark: SparkSession,
     pdf_cov = spark.createDataFrame(
         p_cov, "polygon_id long, pedge long, plevel int, pcell long")
 
-    q_levels = sorted({r[2] for r in q_cov})
-    p_levels = sorted({r[2] for r in p_cov})
+    q_levels = {r[2] for r in q_cov}
+    p_levels = {r[2] for r in p_cov}
     # direction 1: index cell coarser-or-equal -> probe query ancestors
-    dir1 = (qdf.withColumn("k", F.explode(_ancestors_at(p_levels, "qcell")))
+    dir1 = (qdf.withColumn("k", F.explode(ancestors_at(p_levels, "qcell")))
             .join(pdf_cov.withColumnRenamed("pcell", "k"), "k")
             .select("route_id", "redge", "polygon_id", "pedge"))
     # direction 2: query cell coarser -> probe index ancestors
-    dir2 = (pdf_cov.withColumn("k", F.explode(_ancestors_at(q_levels,
+    dir2 = (pdf_cov.withColumn("k", F.explode(ancestors_at(q_levels,
                                                             "pcell")))
             .join(qdf.withColumnRenamed("qcell", "k"), "k")
             .select("route_id", "redge", "polygon_id", "pedge"))

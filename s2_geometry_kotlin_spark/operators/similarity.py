@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..kernel.coverer import memoized
+
 TOP_K = 10
 QUERY_MOD = 53          # query set = vec_id % QUERY_MOD == 0
 N_PLANES = 8
@@ -101,16 +103,6 @@ def q_embed_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.lit(1 << i)).otherwise(F.lit(0))
         bucket = bucket + bit
     return vecs.select("vec_id", bucket.alias("bucket"))
-
-
-def embed_lsh_buckets_sql() -> str:
-    bits = []
-    for i in range(N_PLANES):
-        plane = "[" + ",".join(repr(float(v)) for v in PLANES[i]) + "]"
-        bits.append(f"CASE WHEN list_dot_product(embedding::DOUBLE[], "
-                    f"{plane}::DOUBLE[]) > 0 THEN {1 << i} ELSE 0 END")
-    return (f"SELECT vec_id, {' + '.join(bits)} AS bucket "
-            f"FROM embeddings")
 
 
 def q_embed_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -291,8 +283,6 @@ IVF_NPROBE = 2
 IVF_ITERS = 5
 
 
-_IVF_CENTROIDS: dict[str, list] = {}
-
 # The driver's oracle harness calls oracle_sql() with no parameters and
 # registers its DuckDB views over this sf dir; override per-run with
 # S2_TEST_SF_DIR (the repo's contract test exports it) or pass sf_dir.
@@ -315,25 +305,23 @@ def _ivf_centroids(train_parquet: str) -> list[list[float]]:
     oracle — at 10^12 rows the same centroids would come from a
     driver-side sample, and assignment stays a per-row fold (no
     shuffle)."""
-    cached = _IVF_CENTROIDS.get(train_parquet)
-    if cached is not None:
-        return cached
-    import pyarrow.parquet as pq
-    tbl = pq.read_table(train_parquet).to_pandas()
-    tbl = tbl.sort_values("vec_id").head(4096)
-    vecs = np.stack([np.asarray(v, dtype=np.float64)
-                     for v in tbl["embedding"]])
-    cents = vecs[:IVF_K].copy()
-    for _ in range(IVF_ITERS):
-        d2 = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for c in range(IVF_K):
-            sel = vecs[assign == c]
-            if len(sel):
-                cents[c] = sel.mean(axis=0)
-    out = [[float(x) for x in np.round(c, 6)] for c in cents]
-    _IVF_CENTROIDS[train_parquet] = out
-    return out
+    def compute():
+        import pyarrow.parquet as pq
+        tbl = pq.read_table(train_parquet).to_pandas()
+        tbl = tbl.sort_values("vec_id").head(4096)
+        vecs = np.stack([np.asarray(v, dtype=np.float64)
+                         for v in tbl["embedding"]])
+        cents = vecs[:IVF_K].copy()
+        for _ in range(IVF_ITERS):
+            d2 = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+            assign = d2.argmin(axis=1)
+            for c in range(IVF_K):
+                sel = vecs[assign == c]
+                if len(sel):
+                    cents[c] = sel.mean(axis=0)
+        return [[float(x) for x in np.round(c, 6)] for c in cents]
+
+    return memoized(("ivf", train_parquet), compute)
 
 
 def _ivf_assign_expr(cents: list[list[float]], vcol):
@@ -649,9 +637,3 @@ def ivf_auto_nprobe(spark: SparkSession, sf_dir: str,
             return p, curve
     return IVF_K, curve
 
-
-def ivf_topk_auto(spark: SparkSession, sf_dir: str,
-                  recall_target: float = 0.8) -> DataFrame:
-    """ivf_topk with nprobe chosen by the sampled recall estimate."""
-    nprobe, _curve = ivf_auto_nprobe(spark, sf_dir, recall_target)
-    return ivf_topk(spark, sf_dir, nprobe=nprobe)

@@ -32,9 +32,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, BooleanType, IntegerType
 
+from ..functions import ancestors_at
 from ..kernel import cellid as ck
 from ..kernel import pip
-from ..kernel.coverer import RegionCoverer
+from ..kernel.coverer import RegionCoverer, content_key, expand, memoized
 from ..kernel.regions import Cell, Polygon
 
 
@@ -42,26 +43,12 @@ def _signed(v: int) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-_COVERING_CACHE: dict = {}
-
-
-def _layer_digest(polygons: list[tuple[str, int, Polygon]]) -> str:
-    """Stable content key: layer/pid plus a digest of all vertex bytes
-    (id()-based keys can collide after garbage collection)."""
-    import hashlib
-    h = hashlib.sha256()
-    for layer, pid, poly in polygons:
-        h.update(f"{layer}|{pid}|{len(poly.loops)}".encode())
-        for lp in poly.loops:
-            h.update(np.ascontiguousarray(lp.vertices).tobytes())
-    return h.hexdigest()
-
-
 def build_covering_rows(polygons: list[tuple[str, int, Polygon]],
                         max_cells: int = 32, min_level: int = 4,
                         max_level: int = 16, level_mod: int = 3):
     """(layer, polygon_id, cell_id, level, range_min, range_max,
-    is_interior) — computed once per layer, driver-side, memoized.
+    is_interior) — computed once per layer, driver-side, and kept in
+    the shared bounded covering memo (kernel.coverer.memoized).
 
     Covering levels are clamped to {4, 7, 10, 13, 16}: the probe side
     explodes each page once per DISTINCT covering level, so an
@@ -70,33 +57,26 @@ def build_covering_rows(polygons: list[tuple[str, int, Polygon]],
     that to 5x for a slightly coarser boundary (more exact-verify
     candidates) — measured 1.9x faster end-to-end at 40M pages with
     bit-identical output."""
-    key = (_layer_digest(polygons), max_cells, min_level, max_level,
-           level_mod)
-    if key in _COVERING_CACHE:
-        return _COVERING_CACHE[key]
-    rows = []
-    coverer = RegionCoverer(max_cells=max_cells, min_level=min_level,
-                            max_level=max_level, level_mod=level_mod)
-    for layer, pid, poly in polygons:
-        for cid in coverer.get_covering(poly):
-            rows.append((
-                layer, pid, _signed(cid), ck.sc_level(cid),
-                _signed(ck.sc_range_min(cid)), _signed(ck.sc_range_max(cid)),
-                bool(poly.contains_cell(Cell(cid))),
-            ))
-    _COVERING_CACHE[key] = rows
-    return rows
+    def compute():
+        rows = []
+        coverer = RegionCoverer(max_cells=max_cells, min_level=min_level,
+                                max_level=max_level, level_mod=level_mod)
+        for layer, pid, poly in polygons:
+            for cid in coverer.get_covering(poly):
+                rows.append((
+                    layer, pid, _signed(cid), ck.sc_level(cid),
+                    _signed(ck.sc_range_min(cid)),
+                    _signed(ck.sc_range_max(cid)),
+                    bool(poly.contains_cell(Cell(cid))),
+                ))
+        return rows
+
+    return memoized(("layer", content_key(polygons), max_cells, min_level,
+                     max_level, level_mod), compute)
 
 
 _COV_SCHEMA = ("layer string, polygon_id long, cell_id long, level int, "
                "range_min long, range_max long, is_interior boolean")
-
-
-def covering_df(spark: SparkSession,
-                polygons: list[tuple[str, int, Polygon]],
-                max_cells: int = 32) -> DataFrame:
-    return spark.createDataFrame(build_covering_rows(polygons, max_cells),
-                                 _COV_SCHEMA)
 
 
 def make_pip_udf(polygons: list[tuple[str, int, Polygon]],
@@ -164,35 +144,19 @@ def make_pip_udf(polygons: list[tuple[str, int, Polygon]],
 def build_buffered_covering_rows(polygons: list[tuple[str, int, Polygon]],
                                  radius_rad: float,
                                  max_cells: int = 32):
-    """U8: coverings expanded by `radius_rad` (S2CellUnion.expand,
-    S2CellUnion.kt:307-350): snap cells to the expand level picked by the
-    kMinWidth metric, add all neighbors, normalize."""
-    from ..kernel import metrics
-    from ..kernel.coverer import RegionCoverer
-    from ..kernel.coverer import normalize as norm
-    key = ("buffered", _layer_digest(polygons), radius_rad, max_cells)
-    if key in _COVERING_CACHE:
-        return _COVERING_CACHE[key]
-    coverer = RegionCoverer(max_cells=max_cells)
-    radius_level = metrics.MIN_WIDTH.get_level_for_min_value(radius_rad)
-    rows = []
-    for layer, pid, poly in polygons:
-        cov = coverer.get_covering(poly)
-        # expand(minRadius, maxLevelDiff=4) semantics
-        # (S2CellUnion.kt:337-350): never expand more than 4 levels finer
-        # than the coarsest covering cell (bounds the output size)
-        min_level = min(ck.sc_level(c) for c in cov)
-        expand_level = min(min_level + 4, radius_level)
-        out = set()
-        for cid in cov:
-            base = ck.sc_parent(cid, expand_level) \
-                if ck.sc_level(cid) > expand_level else cid
-            out.add(base)
-            out.update(ck.get_all_neighbors(base, expand_level))
-        for cid in norm(sorted(out)):
-            rows.append((layer, pid, _signed(cid), ck.sc_level(cid)))
-    _COVERING_CACHE[key] = rows
-    return rows
+    """U8: (layer, polygon_id, cell_id, level) of each covering expanded
+    by `radius_rad` (kernel.coverer.expand)."""
+    def compute():
+        coverer = RegionCoverer(max_cells=max_cells)
+        rows = []
+        for layer, pid, poly in polygons:
+            for cid in expand(coverer.get_covering(poly),
+                              radius_rad=radius_rad):
+                rows.append((layer, pid, _signed(cid), ck.sc_level(cid)))
+        return rows
+
+    return memoized(("buffered", content_key(polygons), radius_rad,
+                     max_cells), compute)
 
 
 def make_within_distance_udf(polygons: list[tuple[str, int, Polygon]],
@@ -240,13 +204,9 @@ def within_distance_join(pages: DataFrame, spark: SparkSession,
     rows = build_buffered_covering_rows(polygons, radius_rad)
     cov = spark.createDataFrame(
         rows, "layer string, polygon_id long, cell_id long, level int")
-    levels = sorted({r[3] for r in rows})
-    parents = F.array(*[
-        (F.col("cell_id").bitwiseAND(F.lit(~(2 * (1 << (2 * (30 - lv))) - 1)))
-         .bitwiseOR(F.lit(1 << (2 * (30 - lv))))).cast("long")
-        for lv in levels
-    ])
-    probe = pages.withColumn("probe_cell", F.explode(parents))
+    levels = {r[3] for r in rows}
+    probe = pages.withColumn("probe_cell",
+                             F.explode(ancestors_at(levels, "cell_id")))
     # normalized covering cells are disjoint per polygon -> each page
     # matches at most one cell per polygon; no dedup (and no shuffle)
     joined = probe.join(
@@ -472,17 +432,12 @@ def spatial_join(pages: DataFrame, spark: SparkSession,
     else:
         rows = build_covering_rows(polygons, max_cells)
         cov = spark.createDataFrame(rows, _COV_SCHEMA)
-        levels = sorted({r[3] for r in rows})
-        # ancestor keys at each distinct covering level (pure bit math);
-        # covering cells of one polygon are disjoint, so each page
-        # matches at most one covering cell per polygon — no dedup.
-        parents = F.array(*[
-            (F.col("cell_id")
-             .bitwiseAND(F.lit(~(2 * (1 << (2 * (30 - lv))) - 1)))
-             .bitwiseOR(F.lit(1 << (2 * (30 - lv))))).cast("long")
-            for lv in levels
-        ])
-        probe = pages.withColumn("probe_cell", F.explode(parents))
+        # ancestor keys at each distinct covering level; covering cells
+        # of one polygon are disjoint, so each page matches at most one
+        # covering cell per polygon — no dedup.
+        probe = pages.withColumn(
+            "probe_cell",
+            F.explode(ancestors_at({r[3] for r in rows}, "cell_id")))
 
         if strategy == "broadcast":
             joined = probe.join(

@@ -120,13 +120,9 @@ def main() -> None:
     from s2_geometry_kotlin_spark.operators import spatial_join as SJ
     rows = SJ.build_covering_rows(layer)
     cov = spark.createDataFrame(rows, SJ._COV_SCHEMA)
-    levels = sorted({r[3] for r in rows})
-    parents = F.array(*[
-        (F.col("cell_id")
-         .bitwiseAND(F.lit(~(2 * (1 << (2 * (30 - lv))) - 1)))
-         .bitwiseOR(F.lit(1 << (2 * (30 - lv))))).cast("long")
-        for lv in levels])
-    probe = geo.withColumn("probe_cell", F.explode(parents))
+    probe = geo.withColumn(
+        "probe_cell",
+        F.explode(s2f.ancestors_at({r[3] for r in rows}, "cell_id")))
     salted_cov = (cov.withColumnRenamed("cell_id", "probe_cell")
                   .join(spark.range(8).select(
                       F.col("id").cast("int").alias("salt"))))

@@ -52,16 +52,13 @@ def _rows(df):
 def test_pip_udf_interior_equivalence(spark, geo):
     """with_interior=True (kernel skipped on fast-accept rows) must
     produce exactly the rows of `is_interior OR pip(...)`."""
+    from s2_geometry_kotlin_spark.functions import ancestors_at
     from s2_geometry_kotlin_spark.operators import spatial_join as SJ
     from s2_geometry_kotlin_spark.sources.layers import fixture_layer
     layer = fixture_layer()
     rows = SJ.build_covering_rows(layer)
     cov = spark.createDataFrame(rows, SJ._COV_SCHEMA)
-    levels = sorted({r[3] for r in rows})
-    parents = F.array(*[
-        (F.col("cell_id").bitwiseAND(F.lit(~(2 * (1 << (2 * (30 - lv))) - 1)))
-         .bitwiseOR(F.lit(1 << (2 * (30 - lv))))).cast("long")
-        for lv in levels])
+    parents = ancestors_at({r[3] for r in rows}, "cell_id")
     joined = (geo.withColumn("probe_cell", F.explode(parents))
               .join(F.broadcast(cov.withColumnRenamed("cell_id",
                                                       "probe_cell")),
@@ -106,14 +103,15 @@ def test_components_assume_distinct_equivalence(spark):
 
 
 def test_route_covering_memo(spark):
+    from s2_geometry_kotlin_spark.kernel import coverer as cv
     from s2_geometry_kotlin_spark.operators import routes as R
     routes = R.fixture_routes()
     rad = 150000.0 / 6371010.0
-    R._ROUTE_COV_CACHE.clear()
+    cv._MEMO.clear()
     fresh = R.buffered_route_covering(routes, rad, max_cells=64)
     memo = R.buffered_route_covering(routes, rad, max_cells=64)
     assert fresh is memo        # cache hit returns the same object
-    R._ROUTE_COV_CACHE.clear()
+    cv._MEMO.clear()
     again = R.buffered_route_covering(routes, rad, max_cells=64)
     assert again == fresh       # recompute is deterministic
 
@@ -173,11 +171,12 @@ def test_minhash_verify_intersect_equals_join_form(spark):
 
 
 def test_query_covering_memo():
+    from s2_geometry_kotlin_spark.kernel import coverer as cv
     from s2_geometry_kotlin_spark.operators import knn as K
     qs = [(0, 48.8566, 2.3522), (1, 40.7128, -74.006)]
-    K._QCOV_CACHE.clear()
+    cv._MEMO.clear()
     fresh = K._query_covering_rows(qs, 0.02)
     memo = K._query_covering_rows(qs, 0.02)
     assert fresh is memo
-    K._QCOV_CACHE.clear()
+    cv._MEMO.clear()
     assert K._query_covering_rows(qs, 0.02) == fresh
