@@ -276,12 +276,20 @@ class RegionCoverer:
 # ---------------------------------------------------------------------------
 
 # Operators memoize deterministic driver-side constants across calls:
-# coverings (0.3-14 s of pure-Python coverer walk each) and the IVF
-# centroids.  A long-lived driver sees many layers and query batches,
-# so the memo keeps only the most recently used ones.
-MEMO_ENTRIES = 64
+# coverings and the IVF centroids.  A long-lived driver sees many
+# layers and query batches, so the memo keeps only the most recently
+# used ones.  Measured in one driver (4 vCPU): all 50 registry queries
+# at sf0.001 make 24 distinct keys holding 4.9 MB, from 7.6 KB (a
+# 3-point kNN batch) to 2.6 MB (a 12,288-cell layer); a layer covering
+# costs 1.2-27 s to build (the fixture layer: 946 cells, 200 KB,
+# 13 s).  A two-round kNN call on a 24-point batch adds two keys that
+# cost 0.3 s to rebuild; 256 of them hold 12.7 MB (tracemalloc).  With
+# 256 entries a layer covering survives 127 such calls on distinct
+# batches between two joins against it.
+MEMO_ENTRIES = 256
 _MEMO: OrderedDict = OrderedDict()
 _MEMO_LOCK = threading.Lock()
+_RUNNING: dict = {}   # key -> Event set when its compute ends
 
 
 def content_key(items) -> str:
@@ -309,16 +317,28 @@ def content_key(items) -> str:
 
 def memoized(key, compute):
     """compute() once per hashable key; the MEMO_ENTRIES most recently
-    used results are kept.  A hit returns the same object."""
-    with _MEMO_LOCK:
-        if key in _MEMO:
-            _MEMO.move_to_end(key)
-            return _MEMO[key]
-    rows = compute()
-    with _MEMO_LOCK:
-        _MEMO[key] = rows
-        while len(_MEMO) > MEMO_ENTRIES:
-            _MEMO.popitem(last=False)
+    used results are kept.  A hit returns the same object.  A caller
+    that misses while another thread computes the same key waits for
+    that result instead of computing it again."""
+    while True:
+        with _MEMO_LOCK:
+            if key in _MEMO:
+                _MEMO.move_to_end(key)
+                return _MEMO[key]
+            running = _RUNNING.get(key)
+            if running is None:
+                _RUNNING[key] = threading.Event()
+                break
+        running.wait()
+    try:
+        rows = compute()
+        with _MEMO_LOCK:
+            _MEMO[key] = rows
+            while len(_MEMO) > MEMO_ENTRIES:
+                _MEMO.popitem(last=False)
+    finally:
+        with _MEMO_LOCK:
+            _RUNNING.pop(key).set()
     return rows
 
 

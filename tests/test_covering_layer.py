@@ -74,21 +74,28 @@ def test_expand_union_matches_pin(spark):
 
 def test_memo_is_bounded_lru():
     """A long-lived driver that sees more query batches than the bound:
-    the memo never holds more than MEMO_ENTRIES results, the newest is a
-    hit returning the same object, and an evicted batch recomputes equal
-    rows."""
+    the memo never holds more than MEMO_ENTRIES results, an entry
+    survives MEMO_ENTRIES - 1 newer keys, a hit makes it the newest
+    again, and an evicted batch recomputes equal rows."""
     from s2_geometry_kotlin_spark.operators.knn import _query_covering_rows
     cv._MEMO.clear()
-    batches = [[(i, -60.0 + i, 10.0 + i)]
+    batches = [[(i, -60.0 + i * 0.4, 10.0 + i)]
                for i in range(cv.MEMO_ENTRIES + 5)]
     first = _query_covering_rows(batches[0], 0.01)
-    for b in batches[1:]:
+    second = _query_covering_rows(batches[1], 0.01)
+    for b in batches[2:cv.MEMO_ENTRIES]:
+        _query_covering_rows(b, 0.01)
+    assert len(cv._MEMO) == cv.MEMO_ENTRIES
+    assert _query_covering_rows(batches[0], 0.01) is first
+    for b in batches[cv.MEMO_ENTRIES:]:
         newest = _query_covering_rows(b, 0.01)
         assert len(cv._MEMO) <= cv.MEMO_ENTRIES
     assert len(cv._MEMO) == cv.MEMO_ENTRIES
     assert _query_covering_rows(batches[-1], 0.01) is newest
-    again = _query_covering_rows(batches[0], 0.01)
-    assert again is not first and again == first
+    assert _query_covering_rows(batches[0], 0.01) is first
+    again = _query_covering_rows(batches[1], 0.01)
+    assert again is not second and again == second
+    cv._MEMO.clear()
 
 
 def test_memo_threads_share_it_safely():
@@ -121,6 +128,55 @@ def test_memo_threads_share_it_safely():
     assert not any(th.is_alive() for th in threads)
     assert errors == []
     assert len(cv._MEMO) <= cv.MEMO_ENTRIES
+    cv._MEMO.clear()
+
+
+def test_memo_concurrent_misses_compute_once():
+    """Threads that miss on one key at the same time share one compute
+    and get the same object; a compute that raises lets a waiting
+    caller compute instead."""
+    import threading
+    import time
+    cv._MEMO.clear()
+    calls = []
+
+    def slow():
+        calls.append(1)
+        time.sleep(0.05)
+        return ["rows"]
+
+    got = []
+    threads = [threading.Thread(
+        target=lambda: got.append(cv.memoized(("concurrent",), slow)))
+        for _ in range(8)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=60)
+    assert len(calls) == 1 and len(got) == 8
+    assert all(g is got[0] for g in got)
+
+    started = threading.Event()
+
+    def failing():
+        started.set()
+        time.sleep(0.05)
+        raise RuntimeError("compute failed")
+
+    errors = []
+
+    def first():
+        try:
+            cv.memoized(("retry",), failing)
+        except RuntimeError as e:
+            errors.append(e)
+
+    th = threading.Thread(target=first)
+    th.start()
+    assert started.wait(timeout=60)
+    assert cv.memoized(("retry",), lambda: "second") == "second"
+    th.join(timeout=60)
+    assert len(errors) == 1 and not cv._RUNNING
     cv._MEMO.clear()
 
 

@@ -83,6 +83,31 @@ def test_pluggable_snapshot_provider(spark, tmp_path_factory):
     assert snaps["1"] == snaps["2"] == "iceberg-snap-2"
 
 
+def test_iceberg_snapshot_provider_reads_latest_snapshot():
+    """The Iceberg provider asks the table's snapshots metadata table
+    for the newest id ("" for a table with no snapshot yet); a stub
+    session stands in for an Iceberg catalog."""
+    from s2_geometry_kotlin_spark.plans import lineage as L
+
+    class Stub:
+        def __init__(self, rows):
+            self.rows, self.sql_seen = rows, []
+
+        def sql(self, text):
+            self.sql_seen.append(text)
+            return self
+
+        def collect(self):
+            return self.rows
+
+    provide = L.iceberg_snapshot_provider("cat.db.pages")
+    s = Stub([(8155,)])
+    assert provide(s, "/unused") == "8155"
+    assert s.sql_seen == ["SELECT snapshot_id FROM cat.db.pages.snapshots "
+                          "ORDER BY committed_at DESC LIMIT 1"]
+    assert provide(Stub([]), "/unused") == ""
+
+
 def _bucketed(spark, n=90, buckets=3):
     return spark.range(n).select(
         F.col("id"), (F.col("id") % buckets).cast("string").alias("bucket"))
