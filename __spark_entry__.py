@@ -30,10 +30,8 @@ def _geo_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _GEO_SRC_DUCK = (
     "SELECT url, "
-    "CAST(regexp_extract(text, 'GEO\\((-?\\d+\\.\\d+);(-?\\d+\\.\\d+)\\)', 1)"
-    " AS DOUBLE) AS lat, "
-    "CAST(regexp_extract(text, 'GEO\\((-?\\d+\\.\\d+);(-?\\d+\\.\\d+)\\)', 2)"
-    " AS DOUBLE) AS lon "
+    f"CAST(regexp_extract(text, '{P.GEO_REGEX}', 1) AS DOUBLE) AS lat, "
+    f"CAST(regexp_extract(text, '{P.GEO_REGEX}', 2) AS DOUBLE) AS lon "
     "FROM pages WHERE text LIKE '%GEO(%'"
 )
 
@@ -115,11 +113,10 @@ def q_tile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _tile_roundtrip_oracle_sql() -> str:
     tile_expr = (
-        "CAST(floor((CAST(regexp_extract(text, 'GEO\\((-?\\d+\\.\\d+);"
-        "(-?\\d+\\.\\d+)\\)', 1) AS DOUBLE) - (-90.0)) / 1.0) AS BIGINT)"
-        " * 360 + "
-        "CAST(floor((CAST(regexp_extract(text, 'GEO\\((-?\\d+\\.\\d+);"
-        "(-?\\d+\\.\\d+)\\)', 2) AS DOUBLE) - (-180.0)) / 1.0) AS BIGINT)")
+        f"CAST(floor((CAST(regexp_extract(text, '{P.GEO_REGEX}', 1) "
+        f"AS DOUBLE) - (-90.0)) / 1.0) AS BIGINT) * 360 + "
+        f"CAST(floor((CAST(regexp_extract(text, '{P.GEO_REGEX}', 2) "
+        f"AS DOUBLE) - (-180.0)) / 1.0) AS BIGINT)")
     src = (f"SELECT tile, n_pages, (CAST(tile // 360 AS DOUBLE) + 0.5) "
            f"- 90.0 AS lat, (CAST(tile % 360 AS DOUBLE) + 0.5) - 180.0 "
            f"AS lon FROM (SELECT {tile_expr} AS tile, COUNT(*) AS "
@@ -187,14 +184,6 @@ def q_spatial_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     from s2_geometry_kotlin_spark.operators.spatial_join import spatial_join
     return spatial_join(_geo_pages(spark, sf_dir), spark, _layer(),
                         strategy="range")
-
-
-def q_spatial_join_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join with the pure-JVM crossing-parity verify (zero Python
-    workers end-to-end; triage-only signs, identical to the oracle)."""
-    from s2_geometry_kotlin_spark.operators.spatial_join import spatial_join
-    return spatial_join(_geo_pages(spark, sf_dir), spark, _layer(),
-                        strategy="broadcast", verify="sql")
 
 
 WITHIN_RADIUS_RAD = 100000.0 / 6371010.0  # 100 km
@@ -788,9 +777,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
     # Board consolidation (round 4): the driver checks at most 50 rows,
     # so redundant diagnostics were demoted to unit/bench coverage —
-    # spatial_join_sql (bit-identical parity mirror of spatial_join,
-    # still exercised by tests + bench), simhash (feeds the surviving
-    # simhash_neardup_pairs oracle), embed_lsh_buckets (feeds
+    # simhash (feeds the surviving simhash_neardup_pairs oracle),
+    # embed_lsh_buckets (feeds
     # embed_ann_bucketed/multiprobe), pages_synth (input identity is
     # transitively pinned by every other oracle); tile_index +
     # tile_to_cell merged into tile_roundtrip, hot_cells folded into

@@ -115,20 +115,16 @@ def run_queries(spark, sf_dir: str) -> tuple[dict, int]:
     timed("cell_rollup", lambda: force(
         geo.groupBy(s2f.cell_parent(F.col("cell_id"), 8).alias("cell_l8"))
            .agg(F.count("*").alias("n"))))
-    # q3: full spatial join (broadcast; Arrow robust-predicate verify —
-    # measured 4-5x faster than the interpreted pure-SQL parity fold,
-    # which exists as the cross-engine correctness mirror).  Join
-    # variants run best-of-3: the r2/r3 salted rows drifted 2x on
-    # unchanged plans, and three samples of a multi-second query are
-    # enough to pierce the documented multi-tenant throttle.
+    # q3: full spatial join (broadcast; the Arrow robust-predicate
+    # verify, the join's one exact verdict path — the DuckDB oracle is
+    # its cross-engine correctness mirror).  Join variants run
+    # best-of-3: the r2/r3 salted rows drifted 2x on unchanged plans,
+    # and three samples of a multi-second query are enough to pierce
+    # the documented multi-tenant throttle.
     join_reps = int(os.environ.get("S2_BENCH_JOIN_REPS", "3"))
     timed("spatial_join", lambda: force(
         spatial_join(geo, spark, layer, strategy="broadcast")),
         n_reps=join_reps)
-    # q3b: the pure-JVM (zero-python-worker) verify variant for reference
-    timed("spatial_join_sqlverify", lambda: force(
-        spatial_join(geo, spark, layer, strategy="broadcast",
-                     verify="sql")))
     # q3c: range-index stabbing join (no probe explode, unclamped
     # coverings — the S2CellIndex path)
     timed("spatial_join_range", lambda: force(

@@ -70,9 +70,6 @@ def main() -> None:
     queries = {
         "spatial_join": lambda: force(
             spatial_join(geo, spark, layer, strategy="broadcast")),
-        "spatial_join_sqlverify": lambda: force(
-            spatial_join(geo, spark, layer, strategy="broadcast",
-                         verify="sql")),
         "spatial_join_range": lambda: force(
             spatial_join(geo, spark, layer, strategy="range")),
         "spatial_join_salted": lambda: force(

@@ -15,8 +15,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 _LATLON = StructType([StructField("lat", DoubleType()),
                       StructField("lon", DoubleType())])

@@ -48,7 +48,6 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from . import pip
 from . import predicates as pred
 from .edges import edge_intersection
 from .regions import Loop, Polygon

@@ -76,13 +76,10 @@ class GraphOptions:
 # the reference surfaces S2Error
 MISSING_SIBLINGS = "BUILDER_MISSING_EXPECTED_SIBLING_EDGES"
 
-# options used by the assembly layers (cited above)
+# options used by the polygon assembly layer (cited above)
 POLYGON_LAYER_OPTIONS = GraphOptions(
     EdgeType.DIRECTED, DegenerateEdges.DISCARD, DuplicateEdges.KEEP,
     SiblingPairs.DISCARD)
-POLYLINE_LAYER_OPTIONS = GraphOptions(
-    EdgeType.DIRECTED, DegenerateEdges.DISCARD, DuplicateEdges.KEEP,
-    SiblingPairs.KEEP)
 
 
 def process_edges(options: GraphOptions,

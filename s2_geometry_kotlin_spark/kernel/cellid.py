@@ -27,12 +27,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from .tables import INVERT_MASK, LOOKUP_IJ, LOOKUP_POS, SWAP_MASK
+from .tables import LOOKUP_IJ, LOOKUP_POS, SWAP_MASK
 
 MAX_LEVEL = 30
 NUM_FACES = 6
 POS_BITS = 2 * MAX_LEVEL + 1  # 61
-FACE_BITS = 3
 LIMIT_IJ = 1 << MAX_LEVEL  # 2^30
 MAX_SIZE = LIMIT_IJ
 

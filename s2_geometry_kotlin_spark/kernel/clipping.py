@@ -16,7 +16,6 @@ import numpy as np
 EPS = 2.220446049250313e-16
 FACE_CLIP_ERROR_RADIANS = 3 * EPS
 FACE_CLIP_ERROR_UV_COORD = 9 * math.sqrt(0.5) * EPS
-EDGE_CLIP_ERROR_UV_COORD = 2.25 * EPS
 INTERSECTS_RECT_ERROR_UV_DIST = 3 * math.sqrt(2.0) * EPS
 
 # kFaceUVWFaces (S2Coords.kt:195-203): neighbor face along (axis, dir)

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import hashlib
 import heapq
-import math
 import threading
 from collections import OrderedDict
 

@@ -20,7 +20,6 @@ import numpy as np
 
 from . import cellid as ck
 from . import edges as ek
-from . import pip
 from .regions import Cell, LatLngRect, LngInterval
 
 

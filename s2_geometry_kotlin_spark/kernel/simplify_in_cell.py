@@ -34,7 +34,6 @@ import math
 import numpy as np
 
 from . import cellid as ck
-from . import distance as dist
 from . import measures
 from . import predicates as pred
 from .builder_graph import assemble_polygon

@@ -14,7 +14,7 @@ full pair join with band-bucket joins (constant work per doc).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SHINGLE_WORDS = 3

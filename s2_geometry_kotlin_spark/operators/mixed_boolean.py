@@ -21,7 +21,6 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 RESULT_SCHEMA = ("pair_id long, op string, n_points long, "
                  "n_polyline_edges long, n_polygon_edges long, "

@@ -10,9 +10,11 @@ Three-tier plan mirroring the reference's work-avoidance structure
    verification (the reference's containsCenter fast path),
 3. exact PIP verify — boundary-cell candidates go through the vectorized
    crossing-parity kernel (SEMI_OPEN, bit-compatible with
-   S2Loop.bruteForceContains) in an Arrow-batched pandas UDF.
+   S2Loop.bruteForceContains, triage then exact escalation) in one
+   Arrow-batched pandas UDF that also takes the interior flag.  This is
+   the join's only verdict path.
 
-Strategies:
+Strategies (each returns the same rows):
 - "broadcast": covering is broadcast; pages never shuffle.  Right when
   layers are small (the common case; reference's brute-force-vs-index
   cutover analogue).
@@ -21,13 +23,15 @@ Strategies:
   pmod(xxhash64(url), nsalt).  Handles the north_rule's "explicit skew
   handling" when a single covering cell matches a huge page population
   (AQE alone cannot split one hot *key* of a broadcast join).
+- "range": S2CellIndex stabbing — one binary search per page against
+  the kernel.cell_index rangeNodes of the unclamped covering.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, BooleanType, IntegerType
@@ -35,6 +39,7 @@ from pyspark.sql.types import ArrayType, BooleanType, IntegerType
 from ..functions import ancestors_at
 from ..kernel import cellid as ck
 from ..kernel import pip
+from ..kernel.cell_index import CellIndex
 from ..kernel.coverer import RegionCoverer, content_key, expand, memoized
 from ..kernel.regions import Cell, Polygon
 
@@ -79,22 +84,22 @@ _COV_SCHEMA = ("layer string, polygon_id long, cell_id long, level int, "
                "range_min long, range_max long, is_interior boolean")
 
 
-def make_pip_udf(polygons: list[tuple[str, int, Polygon]],
-                 with_interior: bool = False):
-    """Arrow-batched verify UDF: (polygon_id, lat, lon) -> contained.
+def make_pip_udf(polygons: list[tuple[str, int, Polygon]]):
+    """Arrow-batched verify UDF: (polygon_id, lat, lon, is_interior) ->
+    contained.
 
     The polygon vertex arrays ride in the UDF closure (broadcast by Spark
     with the task binary — layers are small by design).
 
-    with_interior=True takes the candidate's is_interior flag as a 4th
-    argument and SKIPS the numpy PIP kernel for interior fast-accept
-    rows (they are contained by construction).  The post-UDF filter
+    The candidate's is_interior flag rides INTO the UDF, and the numpy
+    PIP kernel is SKIPPED for interior fast-accept rows (they are
+    contained by construction).  The post-UDF filter
     `is_interior OR pip(...)` cannot skip that compute: ArrowEvalPython
     evaluates the UDF column for every input row before the filter runs
     (guide §4 — Python UDFs are hoisted out of boolean expressions into
-    their own plan node).  Worth it on the range/stabbing path whose
-    unclamped covering makes ~34% of candidates interior; the clamped
-    broadcast covering sees ~1%."""
+    their own plan node).  The skip pays most on the range/stabbing
+    path, whose unclamped covering makes ~34% of candidates interior;
+    the clamped broadcast covering sees ~1%."""
     loops_by_pid: dict[int, list[np.ndarray]] = {
         pid: [lp.vertices for lp in poly.loops]
         for _, pid, poly in polygons
@@ -102,43 +107,27 @@ def make_pip_udf(polygons: list[tuple[str, int, Polygon]],
     inv_by_pid = {pid: bool(getattr(poly, "inverted", False))
                   for _, pid, poly in polygons}
 
-    def _contains(pids: np.ndarray, la: np.ndarray,
-                  lo: np.ndarray) -> np.ndarray:
-        x, y, z = ck.latlng_deg_to_xyz(la, lo)
-        pts = np.stack([x, y, z], axis=1)
-        out = np.zeros(len(pids), dtype=bool)
-        for pid in np.unique(pids):
-            mask = pids == pid
-            out[mask] = pip.polygon_contains_points(
-                loops_by_pid[int(pid)], pts[mask],
-                inverted=inv_by_pid[int(pid)])
-        return out
-
-    if with_interior:
-        @pandas_udf(BooleanType())
-        def pip_contains_i(polygon_id: pd.Series, lat: pd.Series,
-                           lon: pd.Series,
-                           is_interior: pd.Series) -> pd.Series:
-            interior = is_interior.to_numpy(dtype=bool)
-            out = interior.copy()
-            todo = ~interior
-            if todo.any():
-                out[todo] = _contains(
-                    polygon_id.to_numpy(dtype=np.int64)[todo],
-                    lat.to_numpy(dtype=np.float64)[todo],
-                    lon.to_numpy(dtype=np.float64)[todo])
-            return pd.Series(out)
-
-        return pip_contains_i
-
     @pandas_udf(BooleanType())
-    def pip_contains(polygon_id: pd.Series, lat: pd.Series,
-                     lon: pd.Series) -> pd.Series:
-        return pd.Series(_contains(polygon_id.to_numpy(dtype=np.int64),
-                                   lat.to_numpy(dtype=np.float64),
-                                   lon.to_numpy(dtype=np.float64)))
+    def pip_contains_i(polygon_id: pd.Series, lat: pd.Series,
+                       lon: pd.Series, is_interior: pd.Series) -> pd.Series:
+        out = is_interior.to_numpy(dtype=bool).copy()
+        todo = ~out
+        if todo.any():
+            pids = polygon_id.to_numpy(dtype=np.int64)[todo]
+            x, y, z = ck.latlng_deg_to_xyz(
+                lat.to_numpy(dtype=np.float64)[todo],
+                lon.to_numpy(dtype=np.float64)[todo])
+            pts = np.stack([x, y, z], axis=1)
+            res = np.zeros(len(pids), dtype=bool)
+            for pid in np.unique(pids):
+                mask = pids == pid
+                res[mask] = pip.polygon_contains_points(
+                    loops_by_pid[int(pid)], pts[mask],
+                    inverted=inv_by_pid[int(pid)])
+            out[todo] = res
+        return pd.Series(out)
 
-    return pip_contains
+    return pip_contains_i
 
 
 def build_buffered_covering_rows(polygons: list[tuple[str, int, Polygon]],
@@ -220,66 +209,54 @@ def within_distance_join(pages: DataFrame, spark: SparkSession,
 
 def build_range_index(polygons: list[tuple[str, int, Polygon]],
                       max_cells: int = 32):
-    """S2CellIndex in range form (index/cell/S2CellIndex.kt — build()
-    :150 creates sorted rangeNodes :112 from boundary deltas;
-    visitIntersectingCells :234 is the stabbing query): the coverings'
-    [range_min, range_max] leaf intervals are swept into disjoint
-    SEGMENTS, each carrying the set of covering rows active over it.  A
-    page is then located with ONE binary search instead of one
-    probe-row per covering level — no probe-side explode at all, so
+    """S2CellIndex in range form (kernel.cell_index.CellIndex, the port
+    of index/cell/S2CellIndex.kt): every covering row is added with its
+    row index as the label, and build() sweeps them into rangeNodes, a
+    sorted partition of the leaf range.  A range's refs are the rows
+    whose cells contain it: its deepest cell and that cell's parent
+    chain.  A page is then located with ONE binary search instead of
+    one probe-row per covering level — no probe-side explode at all, so
     this path can use the UNCLAMPED covering (every level, tighter
     boundary, more interior fast-accepts).
 
-    Returns (starts_u64, offsets, refs, meta_rows): segment start keys
-    (uint64, ascending, sentinel 0), flattened active-row ref lists,
-    and per-ref (ref, layer, polygon_id, is_interior) metadata."""
+    Returns (starts_u64, offsets, refs, meta_rows): range start keys
+    (uint64, ascending, led by an empty range at 0, below every leaf),
+    flattened ref lists, and per-ref (ref, layer, polygon_id,
+    is_interior) metadata."""
     rows = build_covering_rows(polygons, max_cells, min_level=0,
                                max_level=30, level_mod=1)
-
-    def _u(v: int) -> int:
-        return v + (1 << 64) if v < 0 else v
-
-    events: list[tuple[int, int, int]] = []
-    for idx, (_, _, _, _, rmin, rmax, _) in enumerate(rows):
-        events.append((_u(rmin), 0, idx))      # interval opens
-        events.append((_u(rmax) + 1, 1, idx))  # closes after rmax
-    events.sort()
-    starts = [0]
+    index = CellIndex()
+    for idx, row in enumerate(rows):
+        index.add(row[2] % (1 << 64), idx)
+    index.build()
     seg_refs: list[list[int]] = [[]]
-    active: set[int] = set()
-    i = 0
-    n = len(events)
-    while i < n:
-        pos = events[i][0]
-        while i < n and events[i][0] == pos:
-            _, kind, idx = events[i]
-            (active.discard if kind else active.add)(idx)
-            i += 1
-        if pos == starts[-1]:
-            seg_refs[-1] = sorted(active)
-        else:
-            starts.append(pos)
-            seg_refs.append(sorted(active))
+    for node in index.range_contents:
+        refs = []
+        while node >= 0:
+            refs.append(index.cell_tree[node].label)
+            node = index.cell_tree[node].parent
+        seg_refs.append(sorted(refs))
     offsets = np.zeros(len(seg_refs) + 1, dtype=np.int64)
-    for k, refs in enumerate(seg_refs):
-        offsets[k + 1] = offsets[k] + len(refs)
+    offsets[1:] = np.cumsum([len(refs) for refs in seg_refs])
     flat = np.array([r for refs in seg_refs for r in refs],
                     dtype=np.int32)
     meta = [(idx, layer, pid, bool(interior))
             for idx, (layer, pid, _, _, _, _, interior)
             in enumerate(rows)]
-    return (np.array(starts, dtype=np.uint64), offsets, flat, meta)
+    return (np.array([0, *index.range_starts], dtype=np.uint64), offsets,
+            flat, meta)
 
 
 def make_stab_udf(starts: np.ndarray, offsets: np.ndarray,
                   refs: np.ndarray):
     """Arrow-batched stabbing query: leaf cell id -> active covering-row
     refs (the index arrays ride in the closure; KB-sized for layer
-    tables)."""
+    tables).  A null id reads as 0 and lands in the empty range at 0
+    (a plain int64 cast would read it as int64 min, a real leaf range)."""
 
     @pandas_udf(ArrayType(IntegerType()))
     def stab(cell_id: pd.Series) -> pd.Series:
-        c = cell_id.to_numpy(dtype=np.int64).view(np.uint64)
+        c = cell_id.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
         seg = np.searchsorted(starts, c, side="right") - 1
         return pd.Series([refs[offsets[k]:offsets[k + 1]].tolist()
                           for k in seg])
@@ -287,128 +264,38 @@ def make_stab_udf(starts: np.ndarray, offsets: np.ndarray,
     return stab
 
 
-def _pip_edges_array_df(spark: SparkSession,
-                        polygons: list[tuple[str, int, Polygon]]):
-    """(polygon_id, origin_inside, edges: array<struct<cx..cz, dx..dz,
-    ex..ez, seo>>) — per-polygon boundary edge constants for the pure-SQL
-    parity verify.  seo = sign(edge_normal . ORIGIN), precomputed."""
-    from ..kernel import pip as _pip
-    from ..kernel import predicates as _pred
-    o = _pred.ORIGIN
-    rows = []
-    for layer, pid, poly in polygons:
-        oi = bool(getattr(poly, "inverted", False))
-        edges = []
-        for lp in poly.loops:
-            verts = lp.vertices
-            oi ^= _pip.compute_origin_inside(verts)
-            n = len(verts)
-            for i in range(n):
-                c = verts[i]
-                d = verts[(i + 1) % n]
-                e = np.cross(c, d)
-                seo = 1 if float(e @ o) > 0 else -1
-                edges.append((float(c[0]), float(c[1]), float(c[2]),
-                              float(d[0]), float(d[1]), float(d[2]),
-                              float(e[0]), float(e[1]), float(e[2]),
-                              seo))
-        rows.append((pid, bool(oi), edges))
-    schema = ("polygon_id long, origin_inside boolean, edges "
-              "array<struct<cx: double, cy: double, cz: double, "
-              "dx: double, dy: double, dz: double, "
-              "ex: double, ey: double, ez: double, seo: int>>")
-    return spark.createDataFrame(rows, schema)
-
-
-def make_pip_sql_predicate(spark: SparkSession,
-                           polygons: list[tuple[str, int, Polygon]]):
-    """Pure-JVM PIP verify: crossing-parity fold over the polygon's edge
-    array — the same sign algebra as the DuckDB oracle's pipcross CTE
-    (functions/sqlgen.pip_join_ctes), bit-identical verdicts.
-    Triage-only signs (no exact-arithmetic escalation): right for the
-    throughput path where points exactly on polygon edges do not occur;
-    the Arrow kernel path (make_pip_udf) keeps the reference's full
-    robustness ladder.
-
-    The fold evaluates each of the three dot products EXACTLY ONCE per
-    edge: with t = -sgn(op.c) and all signs in {-1, +1}, the crossing
-    test (sgn(op.d) == t) & (-sgn(e.p) == t) & (seo == t) branches on
-    the sign of op.c instead of materializing t (which would inline the
-    op.c dot product into all three comparisons — the pre-r8 form
-    computed it 3x per edge, plus re-derived the op = ORIGIN x p vector
-    per use; op now comes in as three precomputed row columns).
-
-    Returns (edges_df, keep_expr) — join candidates with
-    F.broadcast(edges_df) on polygon_id, filter with keep_expr over
-    page columns (x, y, z from s2f.xyz_cols and opx/opy/opz from
-    origin_cross_cols)."""
-    edges_df = _pip_edges_array_df(spark, polygons)
-    x, y, z = F.col("x"), F.col("y"), F.col("z")
-    opx, opy, opz = F.col("opx"), F.col("opy"), F.col("opz")
-
-    def cross_count(acc, e):
-        opc = opx * e.cx + opy * e.cy + opz * e.cz
-        opd = opx * e.dx + opy * e.dy + opz * e.dz
-        ep = e.ex * x + e.ey * y + e.ez * z
-        # t = -sgn(op.c); sgn(v) = 1 if v > 0 else -1 (as before)
-        crossing = F.when(
-            opc > 0,                       # t = -1
-            (~(opd > 0)) & (ep > 0) & (e.seo == -1)
-        ).otherwise(                       # t = +1
-            (opd > 0) & (~(ep > 0)) & (e.seo == 1))
-        return acc + F.when(crossing, F.lit(1)).otherwise(F.lit(0))
-
-    ncross = F.aggregate("edges", F.lit(0), cross_count)
-    keep = (ncross % 2 == 1) != F.col("origin_inside")
-    return edges_df, keep
-
-
-def origin_cross_cols() -> dict[str, Column]:
-    """op = ORIGIN x p as Columns over row columns x, y, z — computed
-    once per candidate row (guide: hoist row-constant subexpressions out
-    of per-edge lambdas)."""
-    from ..kernel import predicates as _pred
-    ox, oy, oz = (float(v) for v in _pred.ORIGIN)
-    x, y, z = F.col("x"), F.col("y"), F.col("z")
-    return {"opx": F.lit(oy) * z - F.lit(oz) * y,
-            "opy": F.lit(oz) * x - F.lit(ox) * z,
-            "opz": F.lit(ox) * y - F.lit(oy) * x}
-
-
 def spatial_join(pages: DataFrame, spark: SparkSession,
                  polygons: list[tuple[str, int, Polygon]],
                  max_cells: int = 32, strategy: str = "broadcast",
-                 nsalt: int | None = None,
-                 verify: str = "kernel") -> DataFrame:
+                 nsalt: int = 8, verify: str = "kernel") -> DataFrame:
     """pages(url, lat, lon, cell_id) x polygon layer -> (url, layer,
     polygon_id).  Exactly the rows whose point is contained (SEMI_OPEN).
 
-    verify="kernel": Arrow numpy PIP with the robust-predicate ladder
-    (triage -> exact escalation) — the reference-parity path.
-    verify="sql": pure-JVM crossing-parity fold (zero Python workers in
-    the whole join; triage-only signs, identical formula to the oracle).
+    verify="kernel" (the only answer path): Arrow numpy PIP with the
+    robust-predicate ladder (triage -> exact escalation), bit-compatible
+    with the reference's S2Loop predicates.  verify="none" returns the
+    covering-join candidates unverified (a diagnostic stage split, never
+    a query answer).  Any other value raises ValueError.
 
     strategy="range" is the S2CellIndex stabbing path: one Arrow binary
-    search per page against the swept rangeNodes segments instead of a
+    search per page against the index's rangeNodes instead of a
     probe-row per covering level — no probe explode, unclamped (tighter)
     coverings, broadcast ref->metadata join.
 
-    nsalt (salted only) defaults to S2_NSALT or 8.  The salt count is a
-    DATA-size knob, not a core-count knob: the hot coarse covering
-    cells hold rows proportional to corpus size, so the spread that is
-    optimal at one scale under-spreads at 10x.  Measured (same-session
-    A/B, 32 cores): at 2M/8M pages nsalt=8 wins (1.36/2.68 s vs
-    1.67/3.00 s at nsalt=32 — extra covering replication and partition
-    overhead); at 20M pages nsalt=32 wins 1.6x (5.1 s vs 8.3 s —
-    nsalt=8 leaves ~2M-row hot-cell partitions whose verify straggles;
-    AQE skew split does not fire because the partitions are far below
-    skewedPartitionThresholdInBytes).  Local default stays 8 for the
-    2M-page bench contract; size production runs with
-    S2_NSALT ~ rows_per_hot_cell / 250k.
+    nsalt (salted only, default 8).  The salt count is a DATA-size knob,
+    not a core-count knob: the hot coarse covering cells hold rows
+    proportional to corpus size, so the spread that is optimal at one
+    scale under-spreads at 10x.  Measured (same-session A/B, 32 cores):
+    at 2M/8M pages nsalt=8 wins (1.36/2.68 s vs 1.67/3.00 s at nsalt=32
+    — extra covering replication and partition overhead); at 20M pages
+    nsalt=32 wins 1.6x (5.1 s vs 8.3 s — nsalt=8 leaves ~2M-row
+    hot-cell partitions whose verify straggles; AQE skew split does not
+    fire because the partitions are far below
+    skewedPartitionThresholdInBytes).  For large runs pass
+    nsalt ~ rows_per_hot_cell / 250k.
     """
-    if nsalt is None:
-        import os
-        nsalt = int(os.environ.get("S2_NSALT", "8"))
+    if verify not in ("kernel", "none"):
+        raise ValueError(f"unknown verify {verify!r}")
     if strategy == "range":
         starts, offsets, flat, meta = build_range_index(polygons,
                                                         max_cells)
@@ -465,9 +352,6 @@ def spatial_join(pages: DataFrame, spark: SparkSession,
         else:
             raise ValueError(f"unknown strategy {strategy!r}")
 
-    # single pass: interior fast-accept OR exact PIP — one scan of the
-    # pages side (a union of two branches would recompute the whole
-    # upstream chain twice when the input is not materialized)
     if verify == "none":
         # diagnostic stage split for the bench: candidate rows straight
         # from the covering join, NO containment verify — a superset of
@@ -475,19 +359,9 @@ def spatial_join(pages: DataFrame, spark: SparkSession,
         # wall-time drift be attributed to the shuffle/join stage vs
         # the verify stage.
         return joined.select("url", "layer", "polygon_id")
-    if verify == "sql":
-        from .. import functions as s2f
-        xc, yc, zc = s2f.xyz_cols("lat", "lon")
-        joined = joined.withColumns({"x": xc, "y": yc, "z": zc})
-        joined = joined.withColumns(origin_cross_cols())
-        edges_df, pip_keep = make_pip_sql_predicate(spark, polygons)
-        joined = joined.join(F.broadcast(edges_df), "polygon_id", "inner")
-        keep = F.col("is_interior") | pip_keep
-    else:
-        # the interior flag rides INTO the UDF (one bool column) so the
-        # numpy kernel skips fast-accept rows; boolean-identical to
-        # `is_interior | pip(...)` outside
-        pip_udf = make_pip_udf(polygons, with_interior=True)
-        keep = pip_udf(F.col("polygon_id"), F.col("lat"), F.col("lon"),
-                       F.col("is_interior"))
+    # single pass: interior fast-accept OR exact PIP — one scan of the
+    # pages side (a union of two branches would recompute the whole
+    # upstream chain twice when the input is not materialized)
+    keep = make_pip_udf(polygons)(F.col("polygon_id"), F.col("lat"),
+                                  F.col("lon"), F.col("is_interior"))
     return joined.where(keep).select("url", "layer", "polygon_id")

@@ -22,13 +22,11 @@ def _warm_session(spark: SparkSession) -> None:
     parquet): sessions at scale are long-lived, so per-query latency is
     the honest quantity.  The throwaway parquet is keyed by application
     id, so two sessions on one host never share it, and removed after
-    the warmup.  Disable with S2_SESSION_WARMUP=0."""
+    the warmup."""
     app = spark.sparkContext.applicationId
     if app in _WARMED:
         return
     _WARMED.add(app)
-    if os.environ.get("S2_SESSION_WARMUP", "1") == "0":
-        return
     from pyspark.sql import functions as F
     df = spark.range(0, 10000, 1, 8).select(
         (F.col("id") % 97).cast("string").alias("s"), "id")

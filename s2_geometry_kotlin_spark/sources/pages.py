@@ -103,7 +103,8 @@ FROM (
 ) strs
 """
 
-# the regex the engine uses to geoparse coordinates back out of `text`
+# the coordinate regex: the DuckDB oracles geoparse `text` with it, and
+# geoparse() below matches it on the synthesizer's texts
 GEO_REGEX = r"GEO\((-?\d+\.\d+);(-?\d+\.\d+)\)"
 
 
@@ -157,10 +158,8 @@ def load_pages(spark: SparkSession, sf_dir: str,
     pipeline (regex geoparse, cell UDF, joins) runs in one task.  At real
     scale the crawl is thousands of files and this exchange disappears.
     """
-    import os
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    factor = int(os.environ.get("S2_PART_FACTOR", "4"))
-    docs = docs.repartition(spark.sparkContext.defaultParallelism * factor)
+    docs = docs.repartition(spark.sparkContext.defaultParallelism * 4)
     docs.createOrReplaceTempView("__s2_documents")
     return spark.sql(pages_sql_spark("__s2_documents", replicate))
 

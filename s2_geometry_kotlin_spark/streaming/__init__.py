@@ -175,8 +175,8 @@ def _kmv_estimate(hashes: list[int]) -> int:
 def cell_session_state(df: DataFrame, level: int = 8,
                        idle_timeout_ms: int = 3_600_000) -> DataFrame:
     """Custom stateful per-cell tracker: running event count, distinct
-    users (KMV sketch — bounded state, exact below KMV_K=1024 distinct
-    users per cell, ±~3% estimate beyond), first/last event time.  State
+    users (KMV sketch — bounded state, exact below KMV_K=65536 distinct
+    users per cell, ±~0.4% estimate beyond), first/last event time.  State
     is kept per level-8 cell with a PROCESSING-TIME TIMEOUT: a cell idle
     for `idle_timeout_ms` has its state dropped from the store, so state
     size on an unbounded stream is bounded by the active-tile working
@@ -332,41 +332,18 @@ def latest_cell_state(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def run_stateful_stream_to_memory(spark: SparkSession, events_dir: str,
                                   table: str = "stream_state",
-                                  idle_timeout_ms: int = 3_600_000,
-                                  checkpoint_dir: str | None = None) -> None:
+                                  idle_timeout_ms: int = 3_600_000) -> None:
     """One bounded pass: processes every pending file (one micro-batch
-    each), then stops via the drain-poll driver above.  Pass a
-    checkpoint_dir to resume the state store across calls
-    (processing-time timeouts fire on the first batch of the next run
-    once the idle window has elapsed)."""
+    each), then stops via the drain-poll driver above.  The memory sink
+    refuses checkpoint recovery: to resume the state store across runs
+    use run_stateful_stream_to_parquet (processing-time timeouts fire on
+    the first batch of the next run once the idle window has
+    elapsed)."""
     src = stream_events_from_dir(spark, events_dir)
     out = cell_session_state(src, idle_timeout_ms=idle_timeout_ms)
-    if checkpoint_dir is None:
-        q = (out.writeStream.format("memory").queryName(table)
-             .outputMode("update").start())
-        _drain_and_stop(q)
-        return
-    # the memory sink refuses checkpoint recovery, so the resumable
-    # variant collects per-batch updates via foreachBatch (which
-    # supports any sink semantics) and registers the union as a temp
-    # view under the same name
-    import pandas as pd
-    batches: list = []
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        pdf = batch_df.toPandas()
-        if len(pdf):
-            batches.append(pdf)
-
-    q = (out.writeStream.foreachBatch(sink).outputMode("update")
-         .option("checkpointLocation", checkpoint_dir).start())
+    q = (out.writeStream.format("memory").queryName(table)
+         .outputMode("update").start())
     _drain_and_stop(q)
-    if batches:
-        df = spark.createDataFrame(pd.concat(batches, ignore_index=True),
-                                   schema=CELL_STATE_SCHEMA)
-    else:
-        df = spark.createDataFrame([], schema=CELL_STATE_SCHEMA)
-    df.createOrReplaceTempView(table)
 
 
 # ---------------------------------------------------------------------------

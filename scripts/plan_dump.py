@@ -41,7 +41,10 @@ def main() -> None:
     spark = get_spark("s2-plan-dump", cpus=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    pages_path = os.environ.get("S2_BENCH_PAGES", "/tmp/s2_pages_bench_q")
+    # its own default table: bench_extra.py reuses whatever table sits
+    # at its default path, so a 4x-replicated table written there would
+    # shrink the next bench_extra run from the bench's 2M pages
+    pages_path = os.environ.get("S2_BENCH_PAGES", "/tmp/s2_pages_plan_dump")
     if not os.path.exists(pages_path):
         (P.load_pages(spark, sf_dir, replicate=4)
          .repartition(16).write.mode("overwrite").parquet(pages_path))
@@ -67,9 +70,6 @@ def main() -> None:
             .agg(F.count("*").alias("n"))),
         "spatial_join": spatial_join(geo, spark, layer,
                                      strategy="broadcast"),
-        "spatial_join_sqlverify": spatial_join(geo, spark, layer,
-                                               strategy="broadcast",
-                                               verify="sql"),
         "spatial_join_range": spatial_join(geo, spark, layer,
                                            strategy="range"),
         "spatial_join_salted": spatial_join(geo, spark, layer,

@@ -10,10 +10,6 @@ stage at 20M pages with targeted variants:
   B broadcast  verify=none     (candidate stage)
   C salted     verify=kernel   (the anomalous row)
   D salted     verify=none     (its candidate stage)
-  E salted     verify=sql      (JVM fold in the shuffled stage — if E-D
-                                is small while C-D is large, the excess
-                                is Arrow/Python batching after the
-                                shuffle, not the join)
   F salted     verify=kernel, AQE coalescing disabled (runtime conf)
   G salted     verify=kernel, shuffle.partitions=cpus*8 (if the excess
                                 is reduce-stage task count / skew
@@ -95,9 +91,6 @@ def main() -> None:
     v["D_salted_cand"] = timed(lambda: force(
         spatial_join(geo, spark, layer, strategy="salted",
                      verify="none")))
-    v["E_salted_sql"] = timed(lambda: force(
-        spatial_join(geo, spark, layer, strategy="salted",
-                     verify="sql")))
 
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
                    "false")
@@ -136,9 +129,8 @@ def main() -> None:
     cand_df = spark.read.parquet(cand_path)
     n_cand = cand_df.count()
     out["n_candidates"] = n_cand
-    pip_udf = make_pip_udf(layer)
-    keep = F.col("is_interior") | pip_udf(F.col("polygon_id"),
-                                          F.col("lat"), F.col("lon"))
+    keep = make_pip_udf(layer)(F.col("polygon_id"), F.col("lat"),
+                               F.col("lon"), F.col("is_interior"))
     v["H_verify_only_scan_parallel"] = timed(lambda: force(
         cand_df.where(keep).select("url", "layer", "polygon_id")))
 

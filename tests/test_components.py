@@ -57,6 +57,44 @@ def test_long_chain_converges_in_log_rounds(spark):
     assert got == {(i, 0) for i in range(n)}
 
 
+def test_star_handles_long_chain_and_budget_fails_loud(spark):
+    """A 60-node path has diameter 59: an insufficient round budget must
+    raise (loud failure, by design — silent non-convergence would split
+    clusters), while the default budget labels the whole chain with its
+    minimum id. The large/small-star variant this once also ran is gone;
+    the check now holds connected_components to it."""
+    from s2_geometry_kotlin_spark.operators.components import \
+        connected_components
+    n = 60
+    # descending ids along the path maximize propagation rounds
+    ids = list(range(n - 1, -1, -1))
+    pairs = [(ids[i], ids[i + 1]) for i in range(n - 1)]
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_rounds=2)
+    got = {(r["node"], r["comp"])
+           for r in connected_components(df).collect()}
+    assert got == {(i, 0) for i in range(n)}
+
+
+@pytest.mark.parametrize("pairs,expected", [
+    # ADVICE r4: {(4,5),(4,9),(3,5),(2,9)} is ONE component {2,3,4,5,9};
+    # a premature fixpoint once emitted node 4 twice, with comps 2 and 3
+    ([(4, 5), (4, 9), (3, 5), (2, 9)],
+     [(2, 2), (3, 2), (4, 2), (5, 2), (9, 2)]),
+    # a node appearing only in self-pairs still gets a self-label
+    ([(1, 2), (7, 7)], [(1, 1), (2, 1), (7, 7)]),
+], ids=["advice_r4", "self_pair_only"])
+def test_components_edge_cases(spark, pairs, expected):
+    from s2_geometry_kotlin_spark.operators.components import \
+        connected_components
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    got = sorted((r["node"], r["comp"])
+                 for r in connected_components(df).collect())
+    # one row per node in `expected`: a duplicate label fails too
+    assert got == expected
+
+
 def test_oracle_sql_matches_on_synthetic_pairs():
     """The recursive-CTE closure agrees with the loop's semantics on a
     hand-built graph (checked in DuckDB without Spark)."""
@@ -77,83 +115,6 @@ FROM (SELECT DISTINCT u FROM edges) n
 LEFT JOIN reach r ON r.u = n.u GROUP BY 1 ORDER BY 1"""
     got = {r[0]: r[1] for r in duckdb.sql(sql).fetchall()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
-def test_star_matches_propagation_on_clustered_graph(spark):
-    """large/small-star and min-label propagation agree on a typical
-    dedup-shaped graph (several near-cliques + isolated pairs)."""
-    import random
-
-    from s2_geometry_kotlin_spark.operators.components import (
-        connected_components, connected_components_star)
-    rng = random.Random(7)
-    pairs = []
-    base = 0
-    for size in (5, 8, 3, 2, 6):
-        nodes = list(range(base, base + size))
-        for i in range(1, size):
-            pairs.append((nodes[i], nodes[rng.randrange(i)]))
-        for _ in range(size):
-            a, b = rng.sample(nodes, 2)
-            pairs.append((a, b))
-        base += size + 3  # gaps -> ids not contiguous
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    plain = {(r["node"], r["comp"])
-             for r in connected_components(df).collect()}
-    star = {(r["node"], r["comp"])
-            for r in connected_components_star(df).collect()}
-    assert plain == star
-    assert len(plain) > 0
-
-
-def test_star_handles_long_chain_and_budget_fails_loud(spark):
-    """A 60-node path has diameter 59: an insufficient round budget must
-    raise (loud failure, by design — silent non-convergence would split
-    clusters); the star contraction converges in O(log^2 n) rounds and
-    labels the whole chain with its minimum id."""
-    import pytest
-
-    from s2_geometry_kotlin_spark.operators.components import (
-        connected_components, connected_components_star)
-    n = 60
-    # descending ids along the path maximize propagation rounds
-    ids = list(range(n - 1, -1, -1))
-    pairs = [(ids[i], ids[i + 1]) for i in range(n - 1)]
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_rounds=2)
-    got = {(r["node"], r["comp"])
-           for r in connected_components_star(df, max_rounds=12).collect()}
-    assert got == {(i, 0) for i in range(n)}
-
-def test_star_advice_r4_premature_fixpoint(spark):
-    """ADVICE r4 repro: pairs {(4,5),(4,9),(3,5),(2,9)} form ONE
-    component {2,3,4,5,9}; the old fixpoint test (only "no target is a
-    source") exited while node 4 still held edges to two sink labels,
-    emitting node 4 twice with comps 2 and 3."""
-    from s2_geometry_kotlin_spark.operators.components import (
-        connected_components, connected_components_star)
-    pairs = [(4, 5), (4, 9), (3, 5), (2, 9)]
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    star = sorted((r["node"], r["comp"])
-                  for r in connected_components_star(df).collect())
-    plain = sorted((r["node"], r["comp"])
-                   for r in connected_components(df).collect())
-    assert star == plain == [(2, 2), (3, 2), (4, 2), (5, 2), (9, 2)]
-    # exactly one row per node — no duplicate labels
-    assert len({n for n, _ in star}) == len(star)
-
-
-def test_star_keeps_self_pair_only_nodes(spark):
-    """A node appearing only in self-pairs must still get a self-label
-    (parity with connected_components)."""
-    from s2_geometry_kotlin_spark.operators.components import (
-        connected_components, connected_components_star)
-    pairs = [(1, 2), (7, 7)]
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    star = {(r["node"], r["comp"])
-            for r in connected_components_star(df).collect()}
-    assert star == {(1, 1), (2, 1), (7, 7)}
 
 
 def test_rep_path_equals_full_path(spark):

@@ -300,7 +300,6 @@ def test_session_warmup_table_is_per_app_and_removed(spark, monkeypatch):
     def rmtree(path, **kw):
         removed.append(path)
         real(path, **kw)
-    monkeypatch.delenv("S2_SESSION_WARMUP", raising=False)
     monkeypatch.setattr(S, "_WARMED", set())
     monkeypatch.setattr(S.shutil, "rmtree", rmtree)
     S._warm_session(spark)

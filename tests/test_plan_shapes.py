@@ -62,16 +62,6 @@ def test_jvm_geocode_path_has_no_python_workers(spark):
     assert "ArrowEvalPython" not in plan
 
 
-def test_sql_verify_join_is_pure_jvm_end_to_end(spark):
-    from s2_geometry_kotlin_spark.operators.spatial_join import \
-        spatial_join
-    from s2_geometry_kotlin_spark.sources.layers import fixture_layer
-    plan = _plan(spatial_join(_geo(spark), spark, fixture_layer(),
-                              strategy="broadcast", verify="sql"))
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-
-
 def test_documents_scan_prunes_columns(spark):
     """Column pruning reaches the parquet scan: token counting reads
     only the columns it projects, not the whole documents schema."""

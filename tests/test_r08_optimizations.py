@@ -1,9 +1,8 @@
 """r8 optimization-round regression tests: every optimization that
 changed an operator's internals is pinned against its pre-r8 semantics.
 
-- make_pip_udf(with_interior=True) must equal `is_interior | pip(...)`
-- make_pip_sql_predicate's single-evaluation crossing form must equal
-  the Arrow-kernel verdicts (join-level equality)
+- make_pip_udf, which skips the kernel on interior rows, must equal
+  `is_interior | numpy kernel`
 - connected_components(assume_distinct=True) must equal the default on
   already-distinct pairs (and tolerate duplicate-edge inputs when the
   flag is off)
@@ -50,9 +49,13 @@ def _rows(df):
 
 
 def test_pip_udf_interior_equivalence(spark, geo):
-    """with_interior=True (kernel skipped on fast-accept rows) must
-    produce exactly the rows of `is_interior OR pip(...)`."""
+    """The PIP UDF (kernel skipped on fast-accept rows) must produce
+    exactly the rows of `is_interior OR numpy kernel`."""
+    import numpy as np
+
     from s2_geometry_kotlin_spark.functions import ancestors_at
+    from s2_geometry_kotlin_spark.kernel import cellid as ck
+    from s2_geometry_kotlin_spark.kernel import pip
     from s2_geometry_kotlin_spark.operators import spatial_join as SJ
     from s2_geometry_kotlin_spark.sources.layers import fixture_layer
     layer = fixture_layer()
@@ -63,29 +66,25 @@ def test_pip_udf_interior_equivalence(spark, geo):
               .join(F.broadcast(cov.withColumnRenamed("cell_id",
                                                       "probe_cell")),
                     "probe_cell", "inner"))
-    plain = SJ.make_pip_udf(layer)
-    fused = SJ.make_pip_udf(layer, with_interior=True)
-    old = joined.where(
-        F.col("is_interior") | plain(F.col("polygon_id"), F.col("lat"),
-                                     F.col("lon"))
+    cand = joined.select("url", "layer", "polygon_id", "lat", "lon",
+                         "is_interior").toPandas()
+    pts = np.stack(ck.latlng_deg_to_xyz(cand["lat"].to_numpy(),
+                                        cand["lon"].to_numpy()), axis=1)
+    keep = cand["is_interior"].to_numpy(dtype=bool)
+    for _, pid, poly in layer:
+        m = (cand["polygon_id"] == pid).to_numpy()
+        keep[m] |= pip.polygon_contains_points(
+            [lp.vertices for lp in poly.loops], pts[m],
+            inverted=bool(getattr(poly, "inverted", False)))
+    expect = sorted(cand[keep][["url", "layer", "polygon_id"]]
+                    .itertuples(index=False, name=None))
+    udf = SJ.make_pip_udf(layer)
+    got = joined.where(
+        udf(F.col("polygon_id"), F.col("lat"), F.col("lon"),
+            F.col("is_interior"))
     ).select("url", "layer", "polygon_id")
-    new = joined.where(
-        fused(F.col("polygon_id"), F.col("lat"), F.col("lon"),
-              F.col("is_interior"))
-    ).select("url", "layer", "polygon_id")
-    assert _rows(old) == _rows(new)
-
-
-def test_sqlverify_equals_kernel(spark, geo):
-    """The r8 single-evaluation crossing fold (branch on sign(op.c),
-    precomputed op columns) must match the Arrow-kernel join rows."""
-    from s2_geometry_kotlin_spark.operators.spatial_join import spatial_join
-    from s2_geometry_kotlin_spark.sources.layers import fixture_layer
-    layer = fixture_layer()
-    kernel = spatial_join(geo, spark, layer, strategy="broadcast")
-    sql = spatial_join(geo, spark, layer, strategy="broadcast",
-                       verify="sql")
-    assert _rows(kernel) == _rows(sql)
+    assert _rows(got) == expect
+    assert expect
 
 
 def test_components_assume_distinct_equivalence(spark):

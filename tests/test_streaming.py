@@ -129,23 +129,27 @@ def test_stateful_state_expires_after_timeout(spark, tmp_path_factory):
     assert not (cells_a & cells_b)
 
     ckpt = str(tmp_path_factory.mktemp("expiry_ckpt"))
+    out_root = str(tmp_path_factory.mktemp("expiry_out"))
 
-    def run_once(table):
-        st.run_stateful_stream_to_memory(spark, events_dir, table=table,
-                                         idle_timeout_ms=800,
-                                         checkpoint_dir=ckpt)
+    def run_once(run):
+        # one output directory per run: run 3's rows alone show whether
+        # A's state restarted
+        out_dir = f"{out_root}/{run}"
+        st.run_stateful_stream_to_parquet(spark, events_dir, out_dir, ckpt,
+                                          idle_timeout_ms=800)
+        return out_dir
 
     _write_events(f"{events_dir}/a.parquet", users_a, "2024-01-01")
-    run_once("expiry_run1")
+    run_once("run1")
     time.sleep(1.6)  # exceed the 800ms idle timeout
     # run 2 carries only B-cells; A-cells are idle+expired, so its batch
     # fires their timed-out invocation -> state removed
     _write_events(f"{events_dir}/b.parquet", users_b, "2024-01-02")
-    run_once("expiry_run2")
+    run_once("run2")
     _write_events(f"{events_dir}/c.parquet", users_a, "2024-01-03")
-    run_once("expiry_run3")
+    out3 = run_once("run3")
 
-    rows = spark.table("expiry_run3").collect()
+    rows = st.latest_cell_state(spark, out3).collect()
     latest = {r["cell_l8"]: r for r in rows if r["cell_l8"] in cells_a}
     assert set(latest) == cells_a
     import datetime
