@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..kernel import cellid as ck
 from ..kernel import distance as dist
 from ..kernel.regions import Polygon
+from ..session import local_frame
 from .edges import EDGE_D2_SQL, _EDGE_FIELDS, edge_constants
 from .routes import _edge_d2
 from .spatial_join import build_covering_rows
@@ -64,7 +65,7 @@ def closest_covering_cell(pages: DataFrame, spark: SparkSession,
     schema = (f"edges array<struct<ccid: long, pid: long, rmin: long, "
               f"rmax: long, {fields}>>")
     # one-row broadcast index table holding the whole (cell, label) index
-    idx = spark.createDataFrame([(arr,)], schema)
+    idx = local_frame(spark, [(arr,)], schema)
     x, y, z = s2f.xyz_cols("lat", "lon")
     cand = pages.select("url", "cell_id", x.alias("x"), y.alias("y"),
                         z.alias("z")).crossJoin(F.broadcast(idx))

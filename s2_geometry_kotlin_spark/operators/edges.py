@@ -37,6 +37,7 @@ from ..kernel import cellid as ck
 from ..kernel import distance as dist
 from ..kernel.coverer import RegionCoverer, content_key, memoized
 from ..kernel.regions import Cap, Polygon
+from ..session import local_frame
 
 # dialect-neutral SQL: min squared-chord distance from unit vector
 # (x, y, z) to the edge whose precomputed constants are columns
@@ -106,7 +107,7 @@ EDGE_SCHEMA = ("layer string, polygon_id long, edge_id long, " +
 
 def edge_table(spark: SparkSession,
                polygons: list[tuple[str, int, Polygon]]) -> DataFrame:
-    return spark.createDataFrame(polygon_edge_rows(polygons), EDGE_SCHEMA)
+    return local_frame(spark, polygon_edge_rows(polygons), EDGE_SCHEMA)
 
 
 def edge_covering_rows(polygons: list[tuple[str, int, Polygon]],
@@ -179,8 +180,8 @@ def knn_edges(pages: DataFrame, spark: SparkSession,
         rounds += 1
         terminal = radius >= math.pi
         rows = edge_covering_rows(polygons, radius)
-        cov = spark.createDataFrame(
-            rows, "polygon_id long, edge_id long, level int, probe_cell long")
+        cov = local_frame(spark, rows, "polygon_id long, edge_id long, "
+                          "level int, probe_cell long")
         probe = remaining.withColumn(
             "probe_cell",
             F.explode(ancestors_at({r[2] for r in rows}, "cell_id")))

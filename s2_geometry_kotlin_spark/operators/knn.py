@@ -5,15 +5,20 @@ The reference's S2ClosestPointQuery/S2ClosestEdgeQuery best-first search
 the distributed re-expression replaces it with candidate-set pruning:
 
 1. seed radius from global point density (cell metrics E18),
-2. per-query cap covering at a matching level (driver-side; queries are
-   small), exploded to (query_id, covering cell) rows,
-3. candidate join: pages probed by ancestor-cell equality (broadcast hash
-   join — the pages side never shuffles),
+2. per-query cap covering (driver-side; queries are small), snapped to
+   the round's most frequent covering level L: coarser cells expand to
+   their level-L descendants, finer ones lift to their level-L ancestor,
+3. candidate join: pages probed by their one level-L ancestor, not one
+   row per covering level (broadcast hash join — pages never shuffle),
 4. exact chord distances as pure Column arithmetic (xyz computed once by
    the Arrow kernel UDF; dist2 = (dx^2+dy^2)+dz^2 stays in codegen),
-5. Window.partitionBy(query).orderBy(dist2) row_number <= k,
-6. driver-side escalation: queries whose k-th distance exceeds the
-   covered radius (or with < k results) retry with doubled radius.
+5. one Window.partitionBy(query).orderBy(dist2, url) row_number <= k
+   (Spark plans a partial WindowGroupLimit before the exchange), and
+   the round's top-k — at most k rows per query — is collected,
+6. driver-side escalation from the collected rows: queries whose k-th
+   distance exceeds the covered radius (or with < k results) retry with
+   doubled radius; the rest are done, so a round is one Spark action
+   and the result is a LocalRelation of the collected rows.
 
 knn_points and knn_points_farthest (D7) run this one loop (_knn_loop);
 the farthest form covers antipodal caps, ranks descending and stops on
@@ -27,22 +32,28 @@ candidate pruning replaces (SURVEY.md §4.1).
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import ancestors_at
+from ..functions import cell_parent
 from ..kernel import cellid as ck
 from ..kernel import distance as dist
-from ..kernel.coverer import RegionCoverer, memoized
+from ..kernel.coverer import RegionCoverer, denormalize, memoized
 from ..kernel.regions import Cap
+from ..session import local_frame
 
 
 def _query_covering_rows(queries: list[tuple[int, float, float]],
                          radius_rad: float, max_cells: int = 16,
                          antipodal: bool = False):
-    """(query_id, qx, qy, qz, cell_id, level) covering rows, driver-side.
+    """(level, rows): the queries' cap coverings snapped to one level,
+    rows (query_id, qx, qy, qz, cell_id), driver-side.  The level is the
+    most frequent one in the coverings (ties go to the coarser); each
+    query's snapped cells are deduped and still cover its cap, so pages
+    probe with one ancestor key.
 
     With antipodal=True the covering caps are centered at -q (for
     max-distance queries, D7: the k FARTHEST points from q are the k
@@ -54,17 +65,24 @@ def _query_covering_rows(queries: list[tuple[int, float, float]],
     coverer otherwise re-runs inside every timed query invocation."""
     def compute():
         coverer = RegionCoverer(max_cells=max_cells)
-        rows = []
         r2 = float(dist.radians_to_chord2(radius_rad))
+        covers = []
         for qid, lat, lon in queries:
             x, y, z = ck.latlng_deg_to_xyz(np.array([lat]), np.array([lon]))
             center = np.array([x[0], y[0], z[0]])
             cap = Cap(-center if antipodal else center, r2)
-            for cid in coverer.get_covering(cap):
-                signed = cid - (1 << 64) if cid >= (1 << 63) else cid
-                rows.append((qid, float(x[0]), float(y[0]), float(z[0]),
-                             signed, ck.sc_level(cid)))
-        return rows
+            covers.append(((qid, float(x[0]), float(y[0]), float(z[0])),
+                           coverer.get_covering(cap)))
+        counts = Counter(ck.sc_level(c) for _, cells in covers
+                         for c in cells)
+        level = max(counts, key=lambda lv: (counts[lv], -lv))
+        rows = []
+        for q, cells in covers:
+            snapped = {ck.sc_parent(c, level)
+                       for c in denormalize(cells, level, 1)}
+            rows.extend((*q, cid - (1 << 64) if cid >= (1 << 63) else cid)
+                        for cid in sorted(snapped))
+        return level, rows
 
     return memoized(("query", tuple(queries), radius_rad, max_cells,
                      antipodal), compute)
@@ -79,8 +97,8 @@ def knn_points(pages_xyz: DataFrame, spark: SparkSession,
 
     pages_xyz: DataFrame(url, x, y, z, cell_id) — cached by the caller if
     reused.  queries: [(query_id, lat_deg, lon_deg)].
-    Returns (query_id, url, dist_m, rank), rank 1..k by (dist2, url).
-    Pass a dict as `stats` to receive {"rounds": n} escalation telemetry.
+    Returns (query_id, url, dist_m, rank), rank 1..k by (dist2, url): the
+    rounds run when called, and the result is a LocalRelation.  Pass a dict as `stats` to receive {"rounds": n} escalation telemetry.
     """
     if queries and initial_radius_rad is None:
         n = n_pages_hint or pages_xyz.count()
@@ -121,74 +139,54 @@ def _knn_loop(pages_xyz: DataFrame, spark: SparkSession,
     its k-th distance kth satisfies kth >= 4 - covered2 instead of
     kth <= covered2 (covered2 = chord2 of the round's radius)."""
     order = F.desc("dist2") if farthest else F.col("dist2")
+    w = Window.partitionBy("query_id").orderBy(order, "url")
+    dx = F.col("x") - F.col("qx")
+    dy = F.col("y") - F.col("qy")
+    dz = F.col("z") - F.col("qz")
+    # distance in meters rounded to mm: rank stays exact-FP, the
+    # reported value is robust to last-ulp trig differences
+    dist_m = F.round(
+        F.lit(2.0 * dist.EARTH_RADIUS_METERS) *
+        F.asin(F.lit(0.5) * F.sqrt(F.col("dist2"))), 3)
     remaining = list(queries)
-    results: DataFrame | None = None
+    results = []
     rounds = 0
     while remaining:
         rounds += 1
-        # at radius >= pi the covering is the whole sphere (6 face
-        # cells): this round's top-k is definitive for every remaining
-        # query, so emit it and stop (never reuse a smaller-radius topk)
-        terminal = radius >= math.pi
-        rows = _query_covering_rows(remaining, radius, antipodal=farthest)
-        cov = spark.createDataFrame(
-            rows, "query_id long, qx double, qy double, qz double, "
-                  "cell_id long, level int")
-        probe = pages_xyz.withColumn(
-            "probe_cell",
-            F.explode(ancestors_at({r[5] for r in rows}, "cell_id")))
-        cand = probe.join(
-            F.broadcast(cov.withColumnRenamed("cell_id", "probe_cell")),
-            "probe_cell", "inner")
-        dx = F.col("x") - F.col("qx")
-        dy = F.col("y") - F.col("qy")
-        dz = F.col("z") - F.col("qz")
-        cand = cand.withColumn("dist2", dx * dx + dy * dy + dz * dz)
-        # partial top-k per (query, covering cell) first: many keys ->
-        # parallel, and it bounds what reaches the per-query final sort
-        # (the single-key-per-query window would otherwise see every
-        # candidate of a hot query in one partition)
-        w0 = Window.partitionBy("query_id", "probe_cell") \
-            .orderBy(order, "url")
-        cand = (cand.withColumn("r0", F.row_number().over(w0))
-                .where(F.col("r0") <= k).drop("r0"))
-        w = Window.partitionBy("query_id").orderBy(order, "url")
-        # distance in meters rounded to mm: rank stays exact-FP, the
-        # reported value is robust to last-ulp trig differences
-        dist_m = F.round(
-            F.lit(2.0 * dist.EARTH_RADIUS_METERS) *
-            F.asin(F.lit(0.5) * F.sqrt(F.col("dist2"))), 3)
-        topk = (cand.withColumn("rank", F.row_number().over(w).cast("long"))
-                .where(F.col("rank") <= k)
-                .select("query_id", "url", F.col("dist2"),
-                        dist_m.alias("dist_m"), "rank"))
-        if terminal:
-            results = topk if results is None else \
-                results.unionByName(topk)
-            break
-        # lazy checkpoint: the convergence-check aggregate below is a
-        # full scan, so it materializes topk (a few k rows) once; the
-        # returned result then reads the checkpoint instead of
-        # recomputing the whole candidate join + windows a second time
-        # when the caller consumes it (guide §1.2: don't compute things
-        # twice) — measured ~1.9x on the bench knn leg
-        topk = topk.localCheckpoint(eager=False)
-        kth = F.min("dist2") if farthest else F.max("dist2")
-        got = topk.groupBy("query_id").agg(
-            F.count("*").alias("n"), kth.alias("kth")).collect()
+        level, rows = _query_covering_rows(remaining, radius,
+                                           antipodal=farthest)
+        cov = local_frame(spark, rows, "query_id long, qx double, "
+                          "qy double, qz double, cov_cell long")
+        # one action: the round's top-k (at most k per remaining query)
+        # comes to the driver, which decides convergence from it.  The
+        # key is null-safe: with `=` the optimizer infers
+        # isnotnull(probe_cell) and pushes it into the pages' projection,
+        # where over a pure-Column cell id (functions.with_cellid_jvm)
+        # constraint propagation never finishes planning
+        top = (pages_xyz
+               .withColumn("probe_cell",
+                           cell_parent(F.col("cell_id"), level))
+               .join(F.broadcast(cov),
+                     F.col("probe_cell").eqNullSafe(F.col("cov_cell")))
+               .withColumn("dist2", dx * dx + dy * dy + dz * dz)
+               .withColumn("rank", F.row_number().over(w))
+               .where(F.col("rank") <= k)
+               .select("query_id", "url", "dist2", dist_m.alias("dist_m"),
+                       "rank")
+               .collect())
+        kth = {r["query_id"]: r["dist2"] for r in top if r["rank"] == k}
         covered2 = float(dist.radians_to_chord2(radius))
-        done_ids = {r["query_id"] for r in got if r["n"] >= k and (
-            r["kth"] >= 4.0 - covered2 if farthest
-            else r["kth"] <= covered2)}
-        if done_ids:
-            done_df = topk.where(F.col("query_id").isin(list(done_ids)))
-            results = done_df if results is None else \
-                results.unionByName(done_df)
-        remaining = [q for q in remaining if q[0] not in done_ids]
+        # at radius >= pi the covering is the whole sphere: this round's
+        # top-k is definitive for every remaining query
+        done = {q for q, _, _ in remaining if radius >= math.pi or (
+            q in kth and (kth[q] >= 4.0 - covered2 if farthest
+                          else kth[q] <= covered2))}
+        results.extend((r["query_id"], r["url"], r["dist_m"], r["rank"])
+                       for r in top if r["query_id"] in done)
+        remaining = [q for q in remaining if q[0] not in done]
         radius = min(math.pi, radius * 2.0)
     if stats is not None:
         stats["rounds"] = rounds
-    if results is None:  # no queries
-        return spark.createDataFrame(
-            [], "query_id long, url string, dist_m double, rank long")
-    return results.select("query_id", "url", "dist_m", "rank")
+    results.sort(key=lambda r: (r[0], r[3]))
+    return local_frame(spark, results,
+                       "query_id long, url string, dist_m double, rank long")

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 ROUND_DP = 9
 
 
@@ -35,8 +37,8 @@ def _loop_rows() -> list[tuple[str, int, int, int, float]]:
 
 
 def polygon_loop_areas(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        _loop_rows(),
+    return local_frame(
+        spark, _loop_rows(),
         "layer string, polygon_id long, loop_id long, "
         "n_vertices long, area_sr double")
 

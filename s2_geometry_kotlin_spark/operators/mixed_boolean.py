@@ -22,6 +22,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 RESULT_SCHEMA = ("pair_id long, op string, n_points long, "
                  "n_polyline_edges long, n_polygon_edges long, "
                  "is_empty boolean, is_full boolean")
@@ -73,8 +75,8 @@ def fixture_pairs(spark: SparkSession) -> DataFrame:
         (7, "# 0:0, 0:1, 0:2 | 0:3, 0:4, 0:3 #",
          "# 0:0, 1:0 | -1:1, 0:1, 1:1 | -1:2, 0:2 #"),
     ]
-    return spark.createDataFrame(
-        rows, "pair_id long, geom_a string, geom_b string")
+    return local_frame(
+        spark, rows, "pair_id long, geom_a string, geom_b string")
 
 
 def q_mixed_boolean_counts(spark: SparkSession,

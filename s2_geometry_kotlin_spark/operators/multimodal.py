@@ -30,6 +30,8 @@ from pyspark.sql.types import (BinaryType, DoubleType, IntegerType,
                                LongType, StringType, StructField,
                                StructType)
 
+from ..session import local_frame
+
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType()),
     StructField("kind", StringType()),          # image | audio
@@ -57,7 +59,7 @@ def synth_media(spark, n: int = 256) -> DataFrame:
         payload = hashlib.sha256(f"media{i}".encode()).digest() * (4 + i % 7)
         rows.append((i, kind, bytearray(payload),
                      64 + i % 128, 64 + (i * 7) % 128, 16000))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def _fake_decode(payload: bytes) -> np.ndarray:

@@ -31,6 +31,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 RESULT_SCHEMA = ("case_id long, line_idx long, n_vertices long, "
                  "lat0_e7 long, lng0_e7 long, lat1_e7 long, "
                  "lng1_e7 long")
@@ -62,8 +64,8 @@ FIXTURE_CASES = [
 
 
 def fixture_cases(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        FIXTURE_CASES,
+    return local_frame(
+        spark, FIXTURE_CASES,
         "case_id long, lines string, edge_type string, "
         "polyline_type string, duplicate_edges string, "
         "sibling_pairs string, snap_exponent int")

@@ -33,6 +33,7 @@ from ..kernel import distance as dist
 from ..kernel.coverer import RegionCoverer, content_key, expand, memoized
 from ..kernel.polyline import Polyline
 from ..kernel.regions import Cap
+from ..session import local_frame
 from .edges import (EDGE_D2_SQL, _EDGE_FIELDS, edge_constants,
                     edge_covering_rows)
 
@@ -104,8 +105,8 @@ def _edges_array_df(spark: SparkSession,
     fields = "eid: long, cum: double, " + \
         ", ".join(f"{f}: double" for f in _EDGE_FIELDS)
     schema = f"route_id long, edges array<struct<{fields}>>"
-    return spark.createDataFrame(
-        [(rid, data[rid]) for rid in sorted(data)], schema)
+    return local_frame(
+        spark, [(rid, data[rid]) for rid in sorted(data)], schema)
 
 
 def _edge_d2(e: Column, x: Column, y: Column, z: Column) -> Column:
@@ -139,8 +140,8 @@ def _prejoin_candidates(pages: DataFrame, spark: SparkSession,
     # candidate superset either way).  Guide §2.3: shuffle/generate
     # fewer rows.
     rows = buffered_route_covering(routes, radius_rad, max_cells=64)
-    cov = spark.createDataFrame(
-        rows, "route_id long, level int, probe_cell long")
+    cov = local_frame(
+        spark, rows, "route_id long, level int, probe_cell long")
     levels = {r[1] for r in rows}
     x, y, z = s2f.xyz_cols("lat", "lon")
     probe = (pages.select("url", "cell_id", x.alias("x"), y.alias("y"),
@@ -291,13 +292,13 @@ def crossing_edges_indexed(spark: SparkSession,
             for cid in coverer.get_covering(Cap(mid, r2)):
                 q_cov.append((rid, i, ck.sc_level(cid),
                               cid - (1 << 64) if cid >= (1 << 63) else cid))
-    qdf = spark.createDataFrame(
-        q_cov, "route_id long, redge long, qlevel int, qcell long")
+    qdf = local_frame(
+        spark, q_cov, "route_id long, redge long, qlevel int, qcell long")
     # index-side: polygon edges with coverings (radius 0 via the edge
     # covering helper)
     p_cov = edge_covering_rows(polygons, 0.0)
-    pdf_cov = spark.createDataFrame(
-        p_cov, "polygon_id long, pedge long, plevel int, pcell long")
+    pdf_cov = local_frame(
+        spark, p_cov, "polygon_id long, pedge long, plevel int, pcell long")
 
     q_levels = {r[2] for r in q_cov}
     p_levels = {r[2] for r in p_cov}
@@ -319,10 +320,10 @@ def crossing_edges_indexed(spark: SparkSession,
         r_rows.append((rid, eid, d["cx"], d["cy"], d["cz"],
                        d["dx"], d["dy"], d["dz"],
                        d["ex"], d["ey"], d["ez"]))
-    rdf = spark.createDataFrame(
-        r_rows, "route_id long, redge long, ax double, ay double, "
-                "az double, bx double, by double, bz double, "
-                "nabx double, naby double, nabz double")
+    rdf = local_frame(
+        spark, r_rows, "route_id long, redge long, ax double, ay double, "
+                       "az double, bx double, by double, bz double, "
+                       "nabx double, naby double, nabz double")
     p_rows = []
     for layer, pid, poly in polygons:
         eid = 0
@@ -338,10 +339,10 @@ def crossing_edges_indexed(spark: SparkSession,
                                float(d[0]), float(d[1]), float(d[2]),
                                float(e[0]), float(e[1]), float(e[2])))
                 eid += 1
-    pdf = spark.createDataFrame(
-        p_rows, "polygon_id long, pedge long, cx double, cy double, "
-                "cz double, dx double, dy double, dz double, "
-                "ncdx double, ncdy double, ncdz double")
+    pdf = local_frame(
+        spark, p_rows, "polygon_id long, pedge long, cx double, cy double, "
+                       "cz double, dx double, dy double, dz double, "
+                       "ncdx double, ncdy double, ncdz double")
     j = cand.join(F.broadcast(rdf), ["route_id", "redge"]) \
         .join(F.broadcast(pdf), ["polygon_id", "pedge"])
 

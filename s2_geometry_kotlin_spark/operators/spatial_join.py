@@ -42,6 +42,7 @@ from ..kernel import pip
 from ..kernel.cell_index import CellIndex
 from ..kernel.coverer import RegionCoverer, content_key, expand, memoized
 from ..kernel.regions import Cell, Polygon
+from ..session import local_frame
 
 
 def _signed(v: int) -> int:
@@ -191,8 +192,8 @@ def within_distance_join(pages: DataFrame, spark: SparkSession,
     """Pages within `radius_rad` of each polygon (interior or boundary
     buffer) — buffered-covering prejoin + exact D2 verify."""
     rows = build_buffered_covering_rows(polygons, radius_rad)
-    cov = spark.createDataFrame(
-        rows, "layer string, polygon_id long, cell_id long, level int")
+    cov = local_frame(
+        spark, rows, "layer string, polygon_id long, cell_id long, level int")
     levels = {r[3] for r in rows}
     probe = pages.withColumn("probe_cell",
                              F.explode(ancestors_at(levels, "cell_id")))
@@ -300,9 +301,9 @@ def spatial_join(pages: DataFrame, spark: SparkSession,
         starts, offsets, flat, meta = build_range_index(polygons,
                                                         max_cells)
         stab = make_stab_udf(starts, offsets, flat)
-        meta_df = spark.createDataFrame(
-            meta, "ref int, layer string, polygon_id long, "
-                  "is_interior boolean")
+        meta_df = local_frame(
+            spark, meta, "ref int, layer string, polygon_id long, "
+                         "is_interior boolean")
         # NOTE (r8): a scalar-seg variant (vectorized searchsorted
         # returning one int, then a broadcast (seg -> covering row)
         # join — no per-row Python list building, no Generate) measured
@@ -318,7 +319,7 @@ def spatial_join(pages: DataFrame, spark: SparkSession,
                   .join(F.broadcast(meta_df), "ref", "inner"))
     else:
         rows = build_covering_rows(polygons, max_cells)
-        cov = spark.createDataFrame(rows, _COV_SCHEMA)
+        cov = local_frame(spark, rows, _COV_SCHEMA)
         # ancestor keys at each distinct covering level; covering cells
         # of one polygon are disjoint, so each page matches at most one
         # covering cell per polygon — no dedup.

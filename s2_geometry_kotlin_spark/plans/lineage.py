@@ -54,6 +54,8 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 LINEAGE_SCHEMA = ("job_id string, partition_key string, status string, "
                   "n_rows long, wall_sec double, committed_at timestamp, "
                   "snapshot_id string")
@@ -245,7 +247,7 @@ def run_resumable(spark: SparkSession, df: DataFrame, partition_col: str,
     wall = time.time() - t0
     lineage_rows = [(job_id, key, "done", n, round(wall, 3), None, snapshot)
                     for key, n in counts.items()]
-    (spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA)
+    (local_frame(spark, lineage_rows, LINEAGE_SCHEMA)
      .withColumn("committed_at", F.current_timestamp())
      .coalesce(1).write.mode("append").parquet(_lineage_path(output_dir)))
     _roll_staged(h, job_staging, data, set(counts))

@@ -6,7 +6,8 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _WARMED: set[str] = set()
 
@@ -65,3 +66,25 @@ def get_spark(app: str = "s2-engine", cpus: int | None = None,
     )
     _warm_session(spark)
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: str | StructType) -> DataFrame:
+    """A DataFrame over driver-side row tuples, planned as a LocalRelation.
+
+    `schema` is a DDL string or a StructType.  The rows travel as one
+    pyarrow Table, which Spark plans as a LocalRelation whatever
+    spark.sql.execution.arrow.pyspark.enabled says; the same list given
+    to createDataFrame is a LogicalRDD that starts a Python worker task
+    on every scan.  An action on a LocalRelation alone runs no Spark
+    job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)

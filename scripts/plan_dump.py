@@ -6,6 +6,10 @@ Builds the same DataFrames bench.py times (same sf0.1 inputs, same cached
 `geo`) and writes each query's formatted physical plan to
 plans/r08/<query>_<suffix>.txt so plan-shape claims in
 OPTIMIZATION_r08.md are checkable without running Spark.
+
+kNN has no entry: knn_points runs its escalation rounds when called and
+returns a LocalRelation of the collected rows, so its returned plan shows
+nothing of the join.
 """
 
 from __future__ import annotations
@@ -29,14 +33,12 @@ def main() -> None:
     from s2_geometry_kotlin_spark.operators.components import \
         connected_components
     from s2_geometry_kotlin_spark.operators.dedup import q_minhash_lsh_pairs
-    from s2_geometry_kotlin_spark.operators.knn import knn_points
     from s2_geometry_kotlin_spark.operators.routes import (fixture_routes,
                                                            pages_near_route)
     from s2_geometry_kotlin_spark.operators.spatial_join import spatial_join
     from s2_geometry_kotlin_spark.session import get_spark
     from s2_geometry_kotlin_spark.sources import pages as P
     from s2_geometry_kotlin_spark.sources.layers import fixture_layer
-    from s2_geometry_kotlin_spark.sources.pages import CITIES
 
     spark = get_spark("s2-plan-dump", cpus=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -55,11 +57,6 @@ def main() -> None:
            .withColumn("cell_id", s2f.s2_cellid("lat", "lon"))).cache()
     geo.count()
     layer = fixture_layer()
-
-    qs = [(i, la / 1e6, lo / 1e6) for i, (la, lo) in enumerate(CITIES)]
-    x, y, z = s2f.xyz_cols("lat", "lon")
-    pages_xyz = geo.select("url", "cell_id", x.alias("x"), y.alias("y"),
-                           z.alias("z"))
 
     plans = {
         "geocode": (P.geoparse(pages).where(F.col("lat").isNotNull())
@@ -80,9 +77,6 @@ def main() -> None:
             geo, spark, fixture_routes(), 150000.0 / 6371010.0),
         "minhash_lsh_pairs": q_minhash_lsh_pairs(spark, sf_dir),
     }
-    # knn: the returned (post-escalation-loop) plan
-    plans["knn_pages_cities"] = knn_points(pages_xyz, spark, qs, 8,
-                                           n_pages_hint=1000)
     # one propagation round of connected components over a tiny pair set
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3)], "doc_a long, doc_b long")
