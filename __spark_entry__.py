@@ -20,12 +20,16 @@ from s2_geometry_kotlin_spark.sources import pages as P
 
 
 def _geo_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pages with parsed coordinates and leaf cell ids.
+    """pages with parsed coordinates and leaf cell ids."""
+    return P.geocode(P.load_pages(spark, sf_dir))
 
-    Cell assignment runs fully JVM-side (s2f.with_cellid_jvm): no Python
-    worker in the geocode hot path."""
-    pg = P.geoparse(P.load_pages(spark, sf_dir))
-    return s2f.with_cellid_jvm(pg.where(F.col("lat").isNotNull()))
+
+def _geo_pages_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """geocoded pages as (url, cell_id, x, y, z), the kNN operators'
+    input."""
+    x, y, z = s2f.xyz_cols("lat", "lon")
+    return _geo_pages(spark, sf_dir).select(
+        "url", "cell_id", x.alias("x"), y.alias("y"), z.alias("z"))
 
 
 _GEO_SRC_DUCK = (
@@ -134,9 +138,8 @@ def q_lang_cell_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     join's skew handling keys on."""
     from pyspark.sql import Window
     # single lineage: a self-join of two aggregates over _geo_pages
-    # would duplicate the (large) JVM cell-encode expression tree into
-    # both join branches and blow up task serialization; the window +
-    # one groupBy keeps one copy of the scan and two well-keyed shuffles
+    # would scan, geoparse and encode the pages twice; the window + one
+    # groupBy keeps one copy of the scan and two well-keyed shuffles
     df = (_geo_pages(spark, sf_dir)
           .select("lang", "url",
                   s2f.cell_parent(F.col("cell_id"), 4).alias("cell_l4"),
@@ -359,10 +362,7 @@ def q_knn_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D4/D5: k nearest pages per query point (radius-escalating
     candidate join + window top-k)."""
     from s2_geometry_kotlin_spark.operators.knn import knn_points
-    geo = _geo_pages(spark, sf_dir)
-    pages_xyz = geo.select(
-        "url", "cell_id", s2f.s2_xyz("lat", "lon").alias("p")
-    ).select("url", "cell_id", "p.x", "p.y", "p.z")
+    pages_xyz = _geo_pages_xyz(spark, sf_dir)
     # density hint from parquet metadata (count-only scan) — avoids a
     # full pipeline pass just to calibrate the seed radius
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
@@ -433,10 +433,7 @@ def q_knn_pages_farthest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D7 (max-distance targets): k farthest pages per query point via
     antipodal-cap coverings."""
     from s2_geometry_kotlin_spark.operators.knn import knn_points_farthest
-    geo = _geo_pages(spark, sf_dir)
-    pages_xyz = geo.select(
-        "url", "cell_id", s2f.s2_xyz("lat", "lon").alias("p")
-    ).select("url", "cell_id", "p.x", "p.y", "p.z")
+    pages_xyz = _geo_pages_xyz(spark, sf_dir)
     return knn_points_farthest(pages_xyz, spark, _knn_queries()[:10],
                                KNN_FAR_K)
 
@@ -504,7 +501,6 @@ def _knn_farthest_oracle_sql() -> str:
 
 
 def _closest_cell_oracle_sql() -> str:
-    from s2_geometry_kotlin_spark.functions.sqlgen import xyz_sql
     from s2_geometry_kotlin_spark.operators.cell_knn import \
         closest_covering_cell_sql
     core = [p for p in _layer() if p[0] == "city_core"]

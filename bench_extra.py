@@ -57,9 +57,7 @@ def main() -> None:
     pages = spark.read.parquet(pages_path)
     n_pages = pages.count()
 
-    geo = (P.geoparse(pages).where(F.col("lat").isNotNull())
-           .select("url", "lat", "lon")
-           .withColumn("cell_id", s2f.s2_cellid("lat", "lon"))).cache()
+    geo = P.geocode(pages).select("url", "lat", "lon", "cell_id").cache()
     geo.count()
     layer = fixture_layer()
     qs = [(i, la / 1e6, lo / 1e6) for i, (la, lo) in enumerate(CITIES)]
@@ -87,9 +85,7 @@ def main() -> None:
         "dedup_components": lambda: force(
             q_dedup_components(spark, sf_dir)),
         "geocode": lambda: force(
-            P.geoparse(pages).where(F.col("lat").isNotNull())
-            .select("url", "lat", "lon")
-            .withColumn("cell_id", s2f.s2_cellid("lat", "lon"))),
+            P.geocode(pages).select("url", "lat", "lon", "cell_id")),
         "tile_index": lambda: force(
             geo.select("url", s2f.tile_index(
                 F.col("lat"), F.col("lon")).alias("tile"))),

@@ -1,11 +1,14 @@
 """Spark Column-level surface of the engine.
 
 Geometry kernels enter Spark in exactly two forms:
-- pure Column/SQL expressions (bit math, tile arithmetic) that stay inside
-  whole-stage codegen — used for everything the kernel can express without
-  trig (parent/level/range/tile), and
-- Arrow-batched pandas UDFs over the numpy kernel for the trig-heavy
-  encode/decode (never per-row Python, per BASELINE.json input_hint).
+- Arrow-batched pandas UDFs over the numpy kernel for the cell-id encode
+  and decode (`s2_cellid`, `s2_cell_center`; never per-row Python, per
+  BASELINE.json input_hint).  This is the only cell-id encode: geocoded
+  pages get theirs through `sources.pages.geocode`, and
+- pure Column/SQL expressions that stay inside whole-stage codegen for
+  everything else: bit math on ids (parent/ancestors/token), tile
+  arithmetic, and the closed-form unit vector and bearing (`xyz_cols`,
+  `bearing_deg`).
 """
 
 from __future__ import annotations
@@ -19,9 +22,6 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 _LATLON = StructType([StructField("lat", DoubleType()),
                       StructField("lon", DoubleType())])
-_XYZ = StructType([StructField("x", DoubleType()),
-                   StructField("y", DoubleType()),
-                   StructField("z", DoubleType())])
 
 from ..kernel import cellid as ck
 
@@ -58,16 +58,15 @@ def s2_token(cell_id) -> Column:
 
 @pandas_udf(_LATLON)
 def s2_cell_center(cell_id: pd.Series) -> pd.DataFrame:
-    ids = cell_id.to_numpy(dtype=np.int64, na_value=0)
-    lat, lon = ck.to_latlng_deg(ids)
+    """Center (lat, lon) degrees of each cell id; a null id gives null
+    lat and lon."""
+    ok = cell_id.notna().to_numpy()
+    lat = np.full(len(ok), np.nan)
+    lon = np.full(len(ok), np.nan)
+    if ok.any():
+        lat[ok], lon[ok] = ck.to_latlng_deg(
+            cell_id[ok].to_numpy(dtype=np.int64))
     return pd.DataFrame({"lat": lat, "lon": lon})
-
-
-@pandas_udf(_XYZ)
-def s2_xyz(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-    x, y, z = ck.latlng_deg_to_xyz(lat.to_numpy(dtype=np.float64),
-                                   lon.to_numpy(dtype=np.float64))
-    return pd.DataFrame({"x": x, "y": y, "z": z})
 
 
 # ---------------------------------------------------------------------------
@@ -77,118 +76,9 @@ def s2_xyz(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
 _DEG2RAD = 0.017453292519943295  # float64(pi/180), same constant as numpy
 
 
-# the 8-step Hilbert walk (S2CellId.fromFaceIJ, S2CellId.kt:1081-1110) as
-# one higher-order aggregate over k=7..0: the expression tree is written
-# once and evaluated iteratively per row in the JVM — a literal unrolled
-# Column chain would embed each step's tree inside the next (exponential
-# tree growth -> analyzer OOM).  element_at probes the 1024-entry 4-bit
-# lookup table (LookupCellTables.kt:43-78) passed as a constant array.
-_HILBERT_AGG = """
-aggregate(
-  sequence(7, 0, -1),
-  named_struct('n', CAST({face} AS BIGINT) * CAST(1152921504606846976 AS BIGINT),
-               'bits', CAST({face} & 1 AS BIGINT)),
-  (acc, k) -> named_struct(
-    'n', acc.n | shiftleft(CAST(shiftright(element_at({lut},
-           CAST(acc.bits + shiftleft(shiftright({i}, 4*k) & 15, 6)
-                         + shiftleft(shiftright({j}, 4*k) & 15, 2)
-                AS INT) + 1), 2) AS BIGINT), 8*k),
-    'bits', CAST(element_at({lut},
-           CAST(acc.bits + shiftleft(shiftright({i}, 4*k) & 15, 6)
-                         + shiftleft(shiftright({j}, 4*k) & 15, 2)
-                AS INT) + 1) & 3 AS BIGINT)),
-  acc -> shiftleft(acc.n, 1) + CAST(1 AS BIGINT))
-"""
-
-
-def with_cellid_jvm(df, lat: str = "lat", lon: str = "lon",
-                    out: str = "cell_id"):
-    """E8 leaf cell id computed entirely JVM-side — the
-    latlng -> face/uv -> st -> ij -> Hilbert encode chain
-    (S2LatLng.kt:155-160, S2Coords.kt:343-419,
-    S2QuadraticProjection.kt:41-44, S2CellId.kt:1081-1110) as Column
-    expressions + one higher-order aggregate: no Python worker, no Arrow
-    exchange, no 2x thread oversubscription from python workers.
-
-    Bit-identical to the numpy kernel unless JVM sin/cos differ from
-    numpy's in the last ulp AND that ulp crosses a 2^-30 st-grid
-    boundary (asserted zero on the synthesized coordinate grids by
-    tests/test_round2_fixes.py).
-
-    CAUTION: avoid filtering directly on the unmaterialized output
-    column — predicate pushdown substitutes the full expression chain
-    through every projection layer, exploding the optimizer tree.
-    Materialize (cache/write) first, or compare via projections.  The
-    Arrow kernel (s2_cellid) remains the measured hot path; this Column
-    form exists for python-worker-free deployments and as the
-    cross-engine SQL mirror of the encode.
-    """
-    from ..kernel.tables import LOOKUP_POS
-    latc, lonc = F.col(lat), F.col(lon)
-    # radians via explicit constant multiply (numpy's np.radians form;
-    # java.lang.Math.toRadians computes x/180*pi, 1 ulp off sometimes)
-    phi = latc * F.lit(_DEG2RAD)
-    theta = lonc * F.lit(_DEG2RAD)
-    cos_phi = F.cos(phi)
-    x = F.cos(theta) * cos_phi
-    y = F.sin(theta) * cos_phi
-    z = F.sin(phi)
-    step1 = df.withColumns({"__x": x, "__y": y, "__z": z})
-    x, y, z = F.col("__x"), F.col("__y"), F.col("__z")
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    # largestAbsComponent tie-breaking exactly as the reference.
-    # Selections below use element_at over tiny arrays rather than
-    # nested CASE chains: when the optimizer inlines these expressions
-    # into their consumers, the tree stays linear in size (a nested CASE
-    # would duplicate the selector subtree once per branch, and the
-    # fully-inlined projection used to exceed janino's 64 KB method
-    # limit, knocking the whole stage out of codegen).
-    axis = F.when(ax > ay,
-                  F.when(ax > az, F.lit(0)).otherwise(F.lit(2))) \
-        .otherwise(F.when(ay > az, F.lit(1)).otherwise(F.lit(2)))
-    step2 = step1.withColumn("__axis", axis)
-    axis = F.col("__axis")
-    comp = F.element_at(F.array(x, y, z), axis + F.lit(1))
-    step3 = step2.withColumn("__comp", comp)
-    comp = F.col("__comp")
-    face = F.when(comp < 0, axis + F.lit(3)).otherwise(axis)
-    step4 = step3.withColumn("__face", face)
-    face = F.col("__face")
-    u_num = F.element_at(F.array(y, -x, -x, z, z, -y), face + F.lit(1))
-    v_num = F.element_at(F.array(z, z, -y, y, -x, -x), face + F.lit(1))
-
-    def st(w: Column) -> Column:
-        """Quadratic uvToSt (S2QuadraticProjection.kt:41-44)."""
-        return F.when(w >= 0,
-                      F.lit(0.5) * F.sqrt(F.lit(1.0) + F.lit(3.0) * w)) \
-            .otherwise(F.lit(1.0) -
-                       F.lit(0.5) * F.sqrt(F.lit(1.0) - F.lit(3.0) * w))
-
-    limit = (1 << MAX_LEVEL) - 1
-
-    def ij(s: Column) -> Column:
-        # NB greatest/least skip NULLs; null coords are gated at the end
-        return F.greatest(
-            F.lit(0).cast("long"),
-            F.least(F.lit(limit).cast("long"),
-                    F.floor(F.lit(float(1 << MAX_LEVEL)) * s)))
-
-    step5 = step4.withColumns({
-        "__i": ij(st(u_num / comp)),
-        "__j": ij(st(v_num / comp)),
-        "__lut": F.lit([int(v0) for v0 in LOOKUP_POS]),
-    })
-    cid = F.expr(_HILBERT_AGG.format(face="__face", i="__i", j="__j",
-                                     lut="__lut"))
-    res = step5.withColumn(
-        out, F.when(latc.isNotNull() & lonc.isNotNull(), cid))
-    return res.drop("__x", "__y", "__z", "__axis", "__comp", "__face",
-                    "__i", "__j", "__lut")
-
-
 def xyz_cols(lat, lon) -> tuple[Column, Column, Column]:
     """E1 unit vector as pure Columns (S2LatLng.toPoint,
-    S2LatLng.kt:155-160) — JVM-side companion to the s2_xyz UDF."""
+    S2LatLng.kt:155-160): the engine's one lat/lon -> xyz in Spark."""
     latc = F.col(lat) if isinstance(lat, str) else lat
     lonc = F.col(lon) if isinstance(lon, str) else lon
     phi = latc * F.lit(_DEG2RAD)

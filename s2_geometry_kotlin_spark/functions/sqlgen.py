@@ -230,6 +230,13 @@ def pip_join_ctes(polygons) -> str:
     Polygon edges and loop cross-products are inlined as float literals
     (data, like the vertex coordinates); the determinant signs and the
     parity count are computed by DuckDB.
+
+    The signs are triage-only (plain float determinants, no exact
+    fallback), so this oracle is not exact on boundary points: on the
+    vertices and edge midpoints of `fixture_layer()`'s loops it returns
+    637 rows where numpy `pip.polygon_contains_points` returns 630.  The
+    registry's pages never sit on a polygon boundary.  The exact check
+    on boundary points is `tests/test_spatial_join_exact.py`.
     """
     from ..kernel import pip as _pip
     from ..kernel import predicates as _pred

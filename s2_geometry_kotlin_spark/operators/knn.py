@@ -159,10 +159,10 @@ def _knn_loop(pages_xyz: DataFrame, spark: SparkSession,
                           "qy double, qz double, cov_cell long")
         # one action: the round's top-k (at most k per remaining query)
         # comes to the driver, which decides convergence from it.  The
-        # key is null-safe: with `=` the optimizer infers
-        # isnotnull(probe_cell) and pushes it into the pages' projection,
-        # where over a pure-Column cell id (functions.with_cellid_jvm)
-        # constraint propagation never finishes planning
+        # key is null-safe: geocoded pages never carry a null cell id,
+        # so `<=>` joins the same rows as `=` without the inferred
+        # isnotnull(probe_cell) filter that `=` pushes into the pages'
+        # projection
         top = (pages_xyz
                .withColumn("probe_cell",
                            cell_parent(F.col("cell_id"), level))

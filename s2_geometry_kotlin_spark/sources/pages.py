@@ -21,6 +21,9 @@ micro-degree integers; the engine geoparses them back with a regex
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..functions import s2_cellid
 
 # (lat_micro, lon_micro) of the 8 hot cities
 CITIES = [
@@ -172,7 +175,6 @@ def geoparse(df: DataFrame) -> DataFrame:
     the GEO_REGEX extraction for the single-'GEO(' texts the synthesizer
     emits; malformed payloads cast to null.
     """
-    from pyspark.sql import functions as F
     has = F.instr("text", "GEO(") > 0
     payload = F.substring_index(
         F.substring_index("text", "GEO(", -1), ")", 1)
@@ -180,3 +182,20 @@ def geoparse(df: DataFrame) -> DataFrame:
     lon = F.substring_index(payload, ";", -1).cast("double")
     return df.withColumn("lat", F.when(has, lat)) \
              .withColumn("lon", F.when(has, lon))
+
+
+def geocode(df: DataFrame) -> DataFrame:
+    """Geocoded pages: `geoparse`, then the leaf cell id (the Arrow
+    `s2_cellid` encode), keeping only pages that got one.
+
+    The filter reads the UDF's output, which the optimizer cannot push
+    below the Python evaluation.  A `lat IS NOT NULL` filter would be
+    pushed through the synthesizer's projections with `text`
+    substituted, and the inlined expression tree then outgrows
+    whole-stage codegen's 64 KB method limit.  The price: the optimizer
+    still pushes this filter below the projection, so the plan runs the
+    encode twice, once for the filter and once for the column.
+    """
+    return (geoparse(df)
+            .withColumn("cell_id", s2_cellid("lat", "lon"))
+            .where(F.col("cell_id").isNotNull()))

@@ -52,16 +52,12 @@ def main() -> None:
          .repartition(16).write.mode("overwrite").parquet(pages_path))
     pages = spark.read.parquet(pages_path)
 
-    geo = (P.geoparse(pages).where(F.col("lat").isNotNull())
-           .select("url", "lat", "lon")
-           .withColumn("cell_id", s2f.s2_cellid("lat", "lon"))).cache()
+    geo = P.geocode(pages).select("url", "lat", "lon", "cell_id").cache()
     geo.count()
     layer = fixture_layer()
 
     plans = {
-        "geocode": (P.geoparse(pages).where(F.col("lat").isNotNull())
-                    .select("url", "lat", "lon")
-                    .withColumn("cell_id", s2f.s2_cellid("lat", "lon"))),
+        "geocode": P.geocode(pages).select("url", "lat", "lon", "cell_id"),
         "cell_rollup": (geo.groupBy(
             s2f.cell_parent(F.col("cell_id"), 8).alias("cell_l8"))
             .agg(F.count("*").alias("n"))),

@@ -56,10 +56,7 @@ def main() -> None:
         (P.load_pages(spark, SF_DIR, replicate=REPLICATE)
          .repartition(256).write.mode("overwrite").parquet(PAGES_PATH))
     pages = spark.read.parquet(PAGES_PATH)
-    geo = (P.geoparse(pages).where(F.col("lat").isNotNull())
-           .select("url", "lat", "lon")
-           .withColumn("cell_id", s2f.s2_cellid("lat", "lon"))
-           .cache())
+    geo = P.geocode(pages).select("url", "lat", "lon", "cell_id").cache()
     n = geo.count()
     layer = fixture_layer()
 

@@ -73,9 +73,6 @@ def _calibration(spark, cpus: int, reps: int) -> float:
 
 
 def run_level(cpus: int) -> dict:
-    from pyspark.sql import functions as F
-
-    from s2_geometry_kotlin_spark import functions as s2f
     from s2_geometry_kotlin_spark.operators.spatial_join import spatial_join
     from s2_geometry_kotlin_spark.session import get_spark
     from s2_geometry_kotlin_spark.sources import pages as P
@@ -87,9 +84,7 @@ def run_level(cpus: int) -> dict:
     n = pages.count()
 
     def make_geo():
-        return (P.geoparse(pages).where(F.col("lat").isNotNull())
-                .select("url", "lat", "lon")
-                .withColumn("cell_id", s2f.s2_cellid("lat", "lon")))
+        return P.geocode(pages).select("url", "lat", "lon", "cell_id")
 
     layer = fixture_layer()
     # Full-size warm-up pass: JIT, Arrow buffers, python workers, and —
@@ -241,11 +236,12 @@ Notes
   sandbox; a real crawl arrives pre-split).
 - The salted shuffle-hash variant (hot-cell skew) is benchmarked in
   bench.py (`spatial_join_salted`).
-- Arrow-vectorized kernels are the hot path by measurement: the
-  pure-SQL cell-id encode (s2f.with_cellid_jvm) is bit-identical and
-  runs with zero Python workers.  The pure-SQL PIP verify (a triage-only
-  crossing-parity fold) was deleted: it was inexact on boundary points
-  and 1.6-2.7x slower than the Arrow verify from 450k to 20M pages.
+- Arrow-vectorized kernels are the hot path by measurement.  The
+  pure-Column cell-id encode (an interpreted Hilbert fold) was deleted:
+  it measured 2-4x slower than Arrow batches at 40M pages.  The
+  pure-SQL PIP verify (a triage-only crossing-parity fold) was deleted:
+  it was inexact on boundary points and 1.6-2.7x slower than the Arrow
+  verify from 450k to 20M pages.
 """)
 
 

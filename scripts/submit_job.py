@@ -7,9 +7,10 @@ cluster:
     spark-submit --master <...> --py-files s2pkg.zip \
         scripts/submit_job.py <sf_dir> <out_dir>
 
-The job geocodes the pages table, assigns leaf cells JVM-side, runs the
-broadcast covering spatial join against the fixture layer, and writes
-per-polygon page counts to parquet.  `tests/test_submit_job.py` builds
+The job geocodes the pages table (`sources.pages.geocode`: geoparse,
+then the leaf cell id), runs the broadcast covering spatial join
+against the fixture layer, and writes per-polygon page counts to
+parquet.  `tests/test_submit_job.py` builds
 the zip and runs this under spark-submit from a neutral cwd, proving
 the package imports from the archive alone.
 """
@@ -25,15 +26,12 @@ def main() -> int:
     spark = (SparkSession.builder.appName("s2-submit-job").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     # imports resolve from the --py-files archive
-    from s2_geometry_kotlin_spark import functions as s2f
     from s2_geometry_kotlin_spark.operators.spatial_join import \
         spatial_join
     from s2_geometry_kotlin_spark.sources import pages as P
     from s2_geometry_kotlin_spark.sources.layers import fixture_layer
 
-    geo = s2f.with_cellid_jvm(
-        P.geoparse(P.load_pages(spark, sf_dir))
-        .where(F.col("lat").isNotNull()))
+    geo = P.geocode(P.load_pages(spark, sf_dir))
     counts = (spatial_join(geo, spark, fixture_layer(),
                            strategy="broadcast")
               .groupBy("layer", "polygon_id")

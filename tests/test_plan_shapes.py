@@ -1,7 +1,7 @@
 """Physical-plan shape assertions for the scale-critical operators:
 the properties that make the 100-TB story true are pinned here so a
 refactor that silently degrades the plan (broadcast -> sort-merge,
-JVM path -> Python workers, scan without pruning) fails loudly."""
+equi-join -> all-pairs, scan without pruning) fails loudly."""
 
 import pytest
 
@@ -52,14 +52,6 @@ def test_salted_join_uses_shuffled_hash_not_sort_merge(spark):
                               strategy="salted"))
     assert "ShuffledHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_jvm_geocode_path_has_no_python_workers(spark):
-    """with_cellid_jvm is the zero-Python-worker geocode path: the full
-    Hilbert encode compiles to JVM expressions."""
-    plan = _plan(_geo(spark))
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
 
 
 def test_documents_scan_prunes_columns(spark):

@@ -1,7 +1,7 @@
-"""Round-2 regression tests: JVM-side cellid encode parity, Column
-token, LSH candidate-only verification plan, kNN escalation telemetry &
-terminal round, cell-union coarse-probe guard, synthesis-hash overflow
-safety."""
+"""Round-2 regression tests: Arrow cell-id encode and decode against
+the numpy kernel, Column token, LSH candidate-only verification plan,
+kNN escalation telemetry & terminal round, cell-union coarse-probe
+guard, synthesis-hash overflow safety."""
 
 import duckdb
 import numpy as np
@@ -22,51 +22,43 @@ def spark():
 
 
 # ---------------------------------------------------------------------------
-# JVM Column cellid encode (with_cellid_jvm) vs numpy kernel
+# Arrow cell-id encode and decode vs the numpy kernel
 # ---------------------------------------------------------------------------
 
-def test_jvm_cellid_matches_numpy_random(spark):
-    df = spark.range(100_000).select(
-        (F.rand(seed=7) * 180 - 90).alias("lat"),
-        (F.rand(seed=13) * 360 - 180).alias("lon"))
-    out = s2f.with_cellid_jvm(
-        df.withColumn("np_id", s2f.s2_cellid("lat", "lon")), out="jvm_id")
-    # compare in pandas: a filter on the two derived columns would be
-    # alias-substituted through every projection layer by predicate
-    # pushdown, exploding the expression tree
-    pdf = out.select("np_id", "jvm_id").toPandas()
-    assert (pdf["np_id"].to_numpy() == pdf["jvm_id"].to_numpy()).all()
+# face centers + poles + antimeridian + city coordinates
+_FIXTURE_POINTS = [(0.0, 0.0), (0.0, 90.0), (90.0, 0.0), (0.0, 180.0),
+                   (0.0, -90.0), (-90.0, 0.0), (48.8566, 2.3522),
+                   (-33.8688, 151.2093), (35.6895, 139.6917),
+                   (1e-12, -1e-12)]
 
 
-def test_jvm_cellid_fixture_points(spark):
-    # face centers + poles + antimeridian + city coordinates
-    pts = [(0.0, 0.0), (0.0, 90.0), (90.0, 0.0), (0.0, 180.0),
-           (0.0, -90.0), (-90.0, 0.0), (48.8566, 2.3522),
-           (-33.8688, 151.2093), (35.6895, 139.6917), (1e-12, -1e-12)]
+@pytest.mark.parametrize("pts", [
+    pytest.param(_FIXTURE_POINTS, id="fixture_points"),
+    pytest.param([(None, 1.0), (1.0, None), (None, None)],
+                 id="null_passthrough"),
+])
+def test_s2_cellid_matches_kernel(spark, pts):
     df = spark.createDataFrame(pts, "lat double, lon double")
-    rows = s2f.with_cellid_jvm(df, out="cid").collect()
-    la = np.array([p[0] for p in pts])
-    lo = np.array([p[1] for p in pts])
-    exp = ck.to_signed(ck.from_latlng_deg(la, lo))
+    rows = df.withColumn("cid", s2f.s2_cellid("lat", "lon")).collect()
     got = {(r["lat"], r["lon"]): r["cid"] for r in rows}
-    for (plat, plon), e in zip(pts, exp.tolist()):
-        assert got[(plat, plon)] == e, (plat, plon)
+    for plat, plon in pts:
+        exp = None
+        if plat is not None and plon is not None:
+            exp = int(ck.to_signed(ck.from_latlng_deg(
+                np.array([plat]), np.array([plon])))[0])
+        assert got[(plat, plon)] == exp, (plat, plon)
 
 
-def test_jvm_cellid_null_passthrough(spark):
-    df = spark.sql("SELECT CAST(NULL AS DOUBLE) AS lat, 1.0 AS lon "
-                   "UNION ALL SELECT 1.0, CAST(NULL AS DOUBLE)")
-    rows = s2f.with_cellid_jvm(df, out="cid").collect()
-    assert all(r["cid"] is None for r in rows)
-
-
-def test_jvm_cellid_plan_has_no_python(spark):
-    df = spark.range(10).select(
-        (F.rand(seed=1) * 180 - 90).alias("lat"),
-        (F.rand(seed=2) * 360 - 180).alias("lon"))
-    out = s2f.with_cellid_jvm(df, out="cid")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+def test_s2_cell_center_null_id_is_null(spark):
+    ids = ck.to_signed(ck.from_latlng_deg(np.array([48.8566]),
+                                          np.array([2.3522]))).tolist()
+    df = spark.createDataFrame([(ids[0],), (None,)], "cid long")
+    rows = df.select("cid", s2f.s2_cell_center("cid").alias("c")) \
+        .collect()
+    got = {r["cid"]: (r["c"]["lat"], r["c"]["lon"]) for r in rows}
+    assert got[None] == (None, None)
+    lat, lon = ck.to_latlng_deg(np.array(ids, dtype=np.int64))
+    assert got[ids[0]] == (float(lat[0]), float(lon[0]))
 
 
 # ---------------------------------------------------------------------------
@@ -139,12 +131,8 @@ def test_knn_terminal_round_covers_sphere(spark):
 def test_knn_single_round_at_calibrated_radius(spark):
     import __spark_entry__ as entrymod
     from s2_geometry_kotlin_spark.operators.knn import knn_points
-    from s2_geometry_kotlin_spark.sources import pages as P
-    sf = "/root/testdata/sf0.001"
-    geo = entrymod._geo_pages(spark, sf)
-    pages_xyz = geo.select(
-        "url", "cell_id", s2f.s2_xyz("lat", "lon").alias("p")
-    ).select("url", "cell_id", "p.x", "p.y", "p.z").cache()
+    pages_xyz = entrymod._geo_pages_xyz(spark,
+                                        "/root/testdata/sf0.001").cache()
     n = pages_xyz.count()
     stats = {}
     res = knn_points(pages_xyz, spark, entrymod._knn_queries(),
