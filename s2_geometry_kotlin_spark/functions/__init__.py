@@ -41,9 +41,9 @@ def s2_cellid(lat: pd.Series, lon: pd.Series) -> pd.Series:
     out = np.zeros(len(la), dtype=np.int64)
     if ok.any():
         out[ok] = ck.to_signed(ck.from_latlng_deg(la[ok], lo[ok]))
-    res = pd.Series(out)
-    res[~ok] = None
-    return res
+    # a nullable int64 column: setting None in an int64 Series would
+    # turn the whole batch into float64 and round every id to 53 bits
+    return pd.Series(pd.arrays.IntegerArray(out, ~ok))
 
 
 def s2_token(cell_id) -> Column:

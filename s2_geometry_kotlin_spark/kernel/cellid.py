@@ -652,6 +652,10 @@ def _sc_from_face_ij_wrap(face: int, i: int, j: int) -> int:
 
 
 def sc_to_face_ij(cid: int) -> tuple[int, int, int]:
+    return sc_to_face_ij_orientation(cid)[:3]
+
+
+def sc_to_face_ij_orientation(cid: int) -> tuple[int, int, int, int]:
     """Pure-python toFaceIJOrientation (S2CellId.kt:808-849)."""
     face = cid >> POS_BITS
     bits = face & 1
@@ -664,7 +668,10 @@ def sc_to_face_ij(cid: int) -> tuple[int, int, int]:
         i += (bits >> 6) << (k * 4)
         j += ((bits >> 2) & 15) << (k * 4)
         bits &= 3
-    return face, i, j
+    # each "00" pair of a non-leaf id's 10*0 suffix flips the swap bit
+    if sc_lsb(cid) & 0x1111111111111110:
+        bits ^= SWAP_MASK
+    return face, i, j, bits
 
 
 # scalar float coordinate transforms
@@ -721,8 +728,12 @@ def sc_bound_uv(cid: int) -> tuple[float, float, float, float]:
     """(u_lo, u_hi, v_lo, v_hi) — scalar ijLevelToBoundUV."""
     face, i, j = sc_to_face_ij(cid)
     size = 1 << (MAX_LEVEL - sc_level(cid))
-    i_lo = i & -size
-    j_lo = j & -size
+    return sc_ij_bound_uv(i & -size, j & -size, size)
+
+
+def sc_ij_bound_uv(i_lo: int, j_lo: int,
+                   size: int) -> tuple[float, float, float, float]:
+    """(u_lo, u_hi, v_lo, v_hi) of the cell at lower-left (i_lo, j_lo)."""
     return (sc_st_to_uv(sc_ij_to_st_min(i_lo)),
             sc_st_to_uv(sc_ij_to_st_min(i_lo + size)),
             sc_st_to_uv(sc_ij_to_st_min(j_lo)),

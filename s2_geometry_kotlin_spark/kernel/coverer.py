@@ -5,14 +5,22 @@ Faithful re-implementation of the reference algorithm
   -(((level << 2*levelMod) + numChildren) << 2*levelMod) + numTerminals
 largest cells first, fewest intersecting children, fewest terminals.
 
-Runs driver-side (or inside an applyInPandas over a polygon layer) —
-coverings are computed once per layer geometry, then exploded/broadcast.
-Every operator keeps its coverings in the one bounded memo below
-(`memoized`), keyed by the `content_key` of its layer.
+Runs on the driver: an operator computes the coverings of its layer
+once and hands them to Spark as a local relation.  Every operator keeps
+its coverings in the one bounded memo below (`memoized`), keyed by the
+`content_key` of its layer.
+
+A popped candidate's children (and, with level_mod > 1, grandchildren)
+are scored in one batch per level: their ids, uv bounds and vertices
+come as one `regions.Cells`, and the region answers for all of them in
+one `may_intersect_cells` / `contains_cells` call.  The batch visits the
+cells and builds the children list in the reference's order, so the
+priority queue, and with it every covering, is the per-cell algorithm's.
 """
 
 from __future__ import annotations
 
+import bisect
 import hashlib
 import heapq
 import threading
@@ -21,17 +29,22 @@ from collections import OrderedDict
 import numpy as np
 
 from . import cellid as ck
+from . import distance as dist
 from . import metrics
-from .regions import Cell
+from .regions import Cell, Cells
 
 DEFAULT_MAX_CELLS = 8  # S2RegionCoverer.kt:715
 
 
 class _Candidate:
-    __slots__ = ("cell", "is_terminal", "children")
+    __slots__ = ("id", "level", "batch", "k", "is_terminal", "children")
 
-    def __init__(self, cell: Cell, is_terminal: bool):
-        self.cell = cell
+    def __init__(self, cid: int, level: int, batch: Cells, k: int,
+                 is_terminal: bool):
+        self.id = cid
+        self.level = level
+        self.batch = batch          # the batch this cell was scored in,
+        self.k = k                  # at row k
         self.is_terminal = is_terminal
         self.children: list[_Candidate] = []
 
@@ -75,59 +88,57 @@ class RegionCoverer:
     def _max_children_shift(self) -> int:
         return 2 * self.level_mod
 
-    def _new_candidate(self, cell: Cell) -> _Candidate | None:
+    def _new_candidates(self, cells: Cells, level: int) -> list[_Candidate]:
+        """newCandidate over a batch of cells of one level, in order: the
+        cells the region may intersect, each terminal or not."""
         region = self._region
-        if not region.may_intersect_cell(cell):
-            return None
-        is_terminal = False
-        if cell.level >= self.min_level:
+        keep = region.may_intersect_cells(cells)
+        terminal = np.zeros(len(cells), dtype=bool)
+        if level >= self.min_level:
             if self._interior:
-                if region.contains_cell(cell):
-                    is_terminal = True
-                elif cell.level + self.level_mod > self.max_level:
-                    return None
+                terminal[keep] = region.contains_cells(cells.take(keep))
+                if level + self.level_mod > self.max_level:
+                    keep &= terminal
+            elif level + self.level_mod > self.max_level:
+                terminal[:] = True
             else:
-                if cell.level + self.level_mod > self.max_level or \
-                        region.contains_cell(cell):
-                    is_terminal = True
-        return _Candidate(cell, is_terminal)
+                terminal[keep] = region.contains_cells(cells.take(keep))
+        ids = cells.ids.tolist()
+        return [_Candidate(ids[k], level, cells, k, bool(terminal[k]))
+                for k in np.flatnonzero(keep).tolist()]
 
-    def _expand_children(self, candidate: _Candidate, cell: Cell,
+    def _expand_children(self, candidate: _Candidate,
                          num_levels: int) -> int:
-        num_levels -= 1
-        num_terminals = 0
-        for child_cell in cell.children():
-            if num_levels > 0:
-                if self._region.may_intersect_cell(child_cell):
-                    num_terminals += self._expand_children(
-                        candidate, child_cell, num_levels)
-                continue
-            child = self._new_candidate(child_cell)
-            if child is not None:
-                candidate.children.append(child)
-                if child.is_terminal:
-                    num_terminals += 1
-        return num_terminals
+        """Add the candidate's descendants num_levels down as its
+        children, level by level in one batch per level: the cells of
+        each level the region may intersect are subdivided into the
+        next.  Returns how many children are terminal."""
+        cells = candidate.batch.take(slice(candidate.k, candidate.k + 1))
+        for _ in range(num_levels - 1):
+            cells = cells.children()
+            cells = cells.take(self._region.may_intersect_cells(cells))
+            if not len(cells):
+                return 0
+        candidate.children = self._new_candidates(
+            cells.children(), candidate.level + num_levels)
+        return sum(c.is_terminal for c in candidate.children)
 
-    def _add_candidate(self, candidate: _Candidate | None) -> None:
-        if candidate is None:
-            return
+    def _add_candidate(self, candidate: _Candidate) -> None:
         if candidate.is_terminal:
-            self._result.append(candidate.cell.id)
+            self._result.append(candidate.id)
             return
-        num_levels = 1 if candidate.cell.level < self.min_level \
+        num_levels = 1 if candidate.level < self.min_level \
             else self.level_mod
-        num_terminals = self._expand_children(candidate, candidate.cell,
-                                              num_levels)
+        num_terminals = self._expand_children(candidate, num_levels)
         shift = self._max_children_shift()
         if not candidate.children:
             return
         if (not self._interior and num_terminals == (1 << shift)
-                and candidate.cell.level >= self.min_level):
+                and candidate.level >= self.min_level):
             candidate.is_terminal = True
             self._add_candidate(candidate)
             return
-        priority = -((((candidate.cell.level << shift) +
+        priority = -((((candidate.level << shift) +
                        len(candidate.children)) << shift) + num_terminals)
         self._seq += 1
         heapq.heappush(self._pq, (-priority, self._seq, candidate))
@@ -162,24 +173,23 @@ class RegionCoverer:
             return []
         if cap.is_full():
             return [int(ck.from_face(f)) for f in range(6)]
-        import numpy as _np
-        from . import distance as dist
         radius_rad = float(dist.chord2_to_radians(max(0.0, cap.radius2)))
         level = metrics.MIN_WIDTH.get_level_for_min_value(radius_rad) - 1
         if level < 0:
             return [int(ck.from_face(f)) for f in range(6)]
         center_id = int(ck.from_xyz(
-            _np.array([cap.center[0]]), _np.array([cap.center[1]]),
-            _np.array([cap.center[2]]))[0])
+            np.array([cap.center[0]]), np.array([cap.center[1]]),
+            np.array([cap.center[2]]))[0])
         return ck.get_vertex_neighbors(center_id, level)
 
     def _get_initial_candidates(self) -> None:
         tmp = RegionCoverer(max_cells=min(4, self.max_cells),
                             max_level=self.max_level)
         cells = tmp.get_fast_covering(self._region)
-        cells = self._adjust_cell_levels(sorted(cells, key=_ukey))
-        for cid in cells:
-            self._add_candidate(self._new_candidate(Cell(cid)))
+        for cid in self._adjust_cell_levels(sorted(cells)):
+            for candidate in self._new_candidates(Cells.from_ids([cid]),
+                                                  ck.sc_level(cid)):
+                self._add_candidate(candidate)
 
     def _get_covering(self, region) -> list[int]:
         self._region = region
@@ -190,7 +200,7 @@ class RegionCoverer:
         while self._pq and (not self._interior or
                             len(self._result) < self.max_cells):
             _, _, candidate = heapq.heappop(self._pq)
-            if (self._interior or candidate.cell.level < self.min_level or
+            if (self._interior or candidate.level < self.min_level or
                     len(candidate.children) == 1 or
                     len(self._result) + len(self._pq) +
                     len(candidate.children) <= self.max_cells):
@@ -223,7 +233,7 @@ class RegionCoverer:
             if (level - self.min_level) % self.level_mod != 0:
                 return False
             if last is not None:
-                if _ukey(last) >= _ukey(cid):
+                if last >= cid:
                     return False
                 if _intersects(last, cid):
                     return False
@@ -279,12 +289,13 @@ class RegionCoverer:
 # layers and query batches, so the memo keeps only the most recently
 # used ones.  Measured in one driver (4 vCPU): all 50 registry queries
 # at sf0.001 make 24 distinct keys holding 4.9 MB, from 7.6 KB (a
-# 3-point kNN batch) to 2.6 MB (a 12,288-cell layer); a layer covering
-# costs 1.2-27 s to build (the fixture layer: 946 cells, 200 KB,
-# 13 s).  A two-round kNN call on a 24-point batch adds two keys that
-# cost 0.3 s to rebuild; 256 of them hold 12.7 MB (tracemalloc).  With
-# 256 entries a layer covering survives 127 such calls on distinct
-# batches between two joins against it.
+# 3-point kNN batch) to 2.6 MB (a 12,288-cell layer).  A layer
+# covering costs 0.09-2.2 s to build (the fixture layer: 946 cells,
+# 200 KB, 1.2 s), a per-edge cap covering 1.7-2.2 s.  A two-round kNN
+# call on a 24-point batch adds two keys that cost 0.3 s to rebuild;
+# 256 of them hold 12.7 MB (tracemalloc).  With 256 entries a layer
+# covering survives 127 such calls on distinct batches between two
+# joins against it.
 MEMO_ENTRIES = 256
 _MEMO: OrderedDict = OrderedDict()
 _MEMO_LOCK = threading.Lock()
@@ -344,10 +355,6 @@ def memoized(key, compute):
 # ---------------------------------------------------------------------------
 # cell-union helpers (U1, U2, U8) as plain-int list ops
 # ---------------------------------------------------------------------------
-
-def _ukey(cid: int) -> int:
-    return cid  # ids are python non-negative ints here (uint64 domain)
-
 
 def _contains(a: int, b: int) -> bool:
     return ck.sc_range_min(a) <= b <= ck.sc_range_max(a)
@@ -428,13 +435,11 @@ def difference(a: list[int], b: list[int]) -> list[int]:
     b_rmin = [ck.sc_range_min(c) for c in b_sorted]
 
     def _intersects_union(cid: int) -> bool:
-        import bisect
         i = bisect.bisect_right(b_rmin, ck.sc_range_max(cid))
         return i > 0 and ck.sc_range_max(b_sorted[i - 1]) >= \
             ck.sc_range_min(cid)
 
     def _contained_by_union(cid: int) -> bool:
-        import bisect
         i = bisect.bisect_right(b_rmin, ck.sc_range_min(cid))
         return i > 0 and ck.sc_range_max(b_sorted[i - 1]) >= \
             ck.sc_range_max(cid)
@@ -507,10 +512,9 @@ def flood_fill(region, start: int) -> list[int]:
 
 def get_simple_covering(region, start_xyz, level: int) -> list[int]:
     """C6 (S2RegionCoverer.getSimpleCovering, S2RegionCoverer.kt:727-735)."""
-    import numpy as _np
-    start = int(ck.from_xyz(_np.array([start_xyz[0]]),
-                            _np.array([start_xyz[1]]),
-                            _np.array([start_xyz[2]]))[0])
+    start = int(ck.from_xyz(np.array([start_xyz[0]]),
+                            np.array([start_xyz[1]]),
+                            np.array([start_xyz[2]]))[0])
     return flood_fill(region, ck.sc_parent(start, level))
 
 

@@ -22,9 +22,25 @@ from . import predicates as pred
 
 def _close_ring(vertices: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """edge arrays (C, D): C[i]=v_i, D[i]=v_{i+1 mod n}."""
-    c = vertices
-    d = np.roll(vertices, -1, axis=0)
-    return c, d
+    return vertices, next_rows(vertices)
+
+
+def next_rows(x: np.ndarray, axis: int = 0) -> np.ndarray:
+    """np.roll(x, -1, axis) for axis 0 or 1, without np.roll's per-call
+    axis handling (the coverer calls this tens of thousands of times)."""
+    if axis == 0:
+        return np.concatenate((x[1:], x[:1]))
+    return np.concatenate((x[:, 1:], x[:, :1]), axis=1)
+
+
+def cross_rows(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise a x b of (n, 3) arrays: np.cross's arithmetic, operation
+    for operation (so the same bits), without its per-call overhead."""
+    out = np.empty(np.broadcast_shapes(a.shape, b.shape))
+    out[:, 0] = a[:, 1] * b[:, 2] - a[:, 2] * b[:, 1]
+    out[:, 1] = a[:, 2] * b[:, 0] - a[:, 0] * b[:, 2]
+    out[:, 2] = a[:, 0] * b[:, 1] - a[:, 1] * b[:, 0]
+    return out
 
 
 def loop_contains_points(vertices: np.ndarray, points: np.ndarray,
@@ -51,15 +67,15 @@ def loop_contains_points(vertices: np.ndarray, points: np.ndarray,
     op[:, 1] = a[2] * points[:, 0] - a[0] * points[:, 2]
     op[:, 2] = a[0] * points[:, 1] - a[1] * points[:, 0]
     det1c = op @ vertices.T                            # (m,n) sign(A,P,C)
-    det1d = np.roll(det1c, -1, axis=1)                 # sign(A,P,D)
-    e = np.cross(c, d)                                 # (n,3), small
+    det1d = next_rows(det1c, axis=1)                   # sign(A,P,D)
+    e = cross_rows(c, d)                               # (n,3), small
     det2 = e @ a                                       # (n,)  sign(C,D,A)
     det3 = points @ e.T                                # (m,n) sign(C,D,P)
 
     pos1c = det1c > err
     neg1c = det1c < -err
-    pos1d = np.roll(pos1c, -1, axis=1)
-    neg1d = np.roll(neg1c, -1, axis=1)
+    pos1d = next_rows(pos1c, axis=1)
+    neg1d = next_rows(neg1c, axis=1)
     pos3 = det3 > err
     neg3 = det3 < -err
     pos2 = det2 > err

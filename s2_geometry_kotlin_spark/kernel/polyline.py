@@ -20,10 +20,10 @@ import numpy as np
 
 from . import cellid as ck
 from . import edges as ek
-from .regions import Cell, LatLngRect, LngInterval
+from .regions import Cell, LatLngRect, LngInterval, PerCellPredicates
 
 
-class Polyline:
+class Polyline(PerCellPredicates):
     def __init__(self, vertices: np.ndarray):
         v = np.asarray(vertices, dtype=np.float64)
         # >= 1: the reference treats one-vertex polylines as valid for

@@ -1,6 +1,9 @@
-"""Scalar region types implementing the S2Region contract used by the
-coverer (SURVEY.md §1.2): cap_bound, may_intersect_cell, contains_cell,
-contains_point.
+"""Region types implementing the S2Region contract used by the coverer
+(SURVEY.md §1.2): cap_bound, may_intersect_cell, contains_cell,
+contains_point, and the batch forms may_intersect_cells / contains_cells
+over a `Cells` batch.  Loop and Polygon answer a batch with one numpy
+pass per loop, and their one-cell predicates are batches of one; the
+other regions loop over their one-cell predicates (`PerCellPredicates`).
 
 These run driver-side over polygon *layers* (small); the per-page hot path
 never touches them — it goes through the exploded covering DataFrame and
@@ -24,12 +27,13 @@ from . import cellid as ck
 from . import distance as dist
 from . import pip
 from . import predicates as pred
+from .tables import POS_TO_IJ, POS_TO_ORIENTATION
 
 DBL_EPS = 2.220446049250313e-16
 
 
 # ---------------------------------------------------------------------------
-# Cell geometry helper (scalar)
+# Cell geometry: one cell (Cell) and a batch of cells (Cells)
 # ---------------------------------------------------------------------------
 
 _UNORM = [
@@ -53,11 +57,13 @@ _VNORM = [
 class Cell:
     """Scalar S2Cell view over a cell id."""
 
-    def __init__(self, cid: int):
+    def __init__(self, cid: int,
+                 bound_uv: tuple[float, float, float, float] | None = None):
         self.id = cid
         self.face = cid >> 61
         self.level = ck.sc_level(cid)
-        self.u_lo, self.u_hi, self.v_lo, self.v_hi = ck.sc_bound_uv(cid)
+        self.u_lo, self.u_hi, self.v_lo, self.v_hi = \
+            ck.sc_bound_uv(cid) if bound_uv is None else bound_uv
         self._vertices: np.ndarray | None = None
 
     def vertices(self) -> np.ndarray:
@@ -104,37 +110,193 @@ class Cell:
         return [Cell(ck.sc_child(self.id, pos)) for pos in range(4)]
 
     def rect_bound(self) -> "LatLngRect":
-        verts = self.vertices()
-        lat = [math.atan2(v[2], math.hypot(v[0], v[1])) for v in verts]
-        lng = [math.atan2(v[1], v[0]) for v in verts]
-        if self.level == 0:
-            # face cells: fixed bounds (S2Cell.getRectBound level-0 cases)
-            pole_min_lat = math.asin(math.sqrt(1.0 / 3.0)) - 2 * DBL_EPS
-            bounds = {
-                0: LatLngRect(-math.pi / 4, math.pi / 4,
-                              -math.pi / 4, math.pi / 4),
-                1: LatLngRect(-math.pi / 4, math.pi / 4,
-                              math.pi / 4, 3 * math.pi / 4),
-                2: LatLngRect(pole_min_lat, math.pi / 2,
-                              -math.pi, math.pi),
-                3: LatLngRect(-math.pi / 4, math.pi / 4,
-                              3 * math.pi / 4, -3 * math.pi / 4),
-                4: LatLngRect(-math.pi / 4, math.pi / 4,
-                              -3 * math.pi / 4, -math.pi / 4),
-                5: LatLngRect(-math.pi / 2, -pole_min_lat,
-                              -math.pi, math.pi),
-            }
-            return bounds[self.face]
-        # non-face cells never contain poles; vertex extremes + 2eps slack
-        lat_lo = min(lat) - 2 * DBL_EPS
-        lat_hi = max(lat) + 2 * DBL_EPS
-        # longitude: cells at level>=1 span < 180 deg
-        i = LngInterval.from_point(float(lng[0]))
-        for t in lng[1:]:
-            i = i.add_point(float(t))
-        i = i.expanded(2 * DBL_EPS)
-        return LatLngRect(max(lat_lo, -math.pi / 2),
-                          min(lat_hi, math.pi / 2), i.lo, i.hi)
+        return _cell_rect_bound(self.level, self.face, self.vertices())
+
+
+def _cell_rect_bound(level: int, face: int,
+                     verts: np.ndarray) -> "LatLngRect":
+    """S2Cell.getRectBound from the cell's level, face and vertices."""
+    if level == 0:
+        # face cells: fixed bounds (S2Cell.getRectBound level-0 cases)
+        pole_min_lat = math.asin(math.sqrt(1.0 / 3.0)) - 2 * DBL_EPS
+        bounds = {
+            0: LatLngRect(-math.pi / 4, math.pi / 4,
+                          -math.pi / 4, math.pi / 4),
+            1: LatLngRect(-math.pi / 4, math.pi / 4,
+                          math.pi / 4, 3 * math.pi / 4),
+            2: LatLngRect(pole_min_lat, math.pi / 2,
+                          -math.pi, math.pi),
+            3: LatLngRect(-math.pi / 4, math.pi / 4,
+                          3 * math.pi / 4, -3 * math.pi / 4),
+            4: LatLngRect(-math.pi / 4, math.pi / 4,
+                          -3 * math.pi / 4, -math.pi / 4),
+            5: LatLngRect(-math.pi / 2, -pole_min_lat,
+                          -math.pi, math.pi),
+        }
+        return bounds[face]
+    verts = verts.tolist()
+    lat = [math.atan2(z, math.hypot(x, y)) for x, y, z in verts]
+    lng = [math.atan2(y, x) for x, y, _ in verts]
+    # non-face cells never contain poles; vertex extremes + 2eps slack
+    lat_lo = min(lat) - 2 * DBL_EPS
+    lat_hi = max(lat) + 2 * DBL_EPS
+    # longitude: cells at level>=1 span < 180 deg
+    i = LngInterval.from_point(lng[0])
+    for t in lng[1:]:
+        i = i.add_point(t)
+    i = i.expanded(2 * DBL_EPS)
+    return LatLngRect(max(lat_lo, -math.pi / 2),
+                      min(lat_hi, math.pi / 2), i.lo, i.hi)
+
+
+# the next corner's index, per corner (edge k runs corner k -> k+1)
+_NEXT_CORNER = [1, 2, 3, 0]
+
+
+class Cells:
+    """A batch of m cells as arrays, the vectorized `Cell`: ids (uint64),
+    faces, levels, and each cell's lower-left (i, j) and Hilbert
+    orientation (for `children`).  The uv bounds and the (m, 4, 3) CCW
+    vertices are computed on first use, with one `_XYZ_TABLE` call per
+    face present (the coverer's batches share one face) and the scalar
+    Cell's arithmetic, so every value equals `Cell`'s bit for bit."""
+
+    __slots__ = ("ids", "face", "level", "i", "j", "orient", "faces",
+                 "_uv", "_vertices", "_views")
+
+    def __init__(self, ids: np.ndarray, face: np.ndarray, level: np.ndarray,
+                 i: np.ndarray, j: np.ndarray, orient: np.ndarray,
+                 faces: list[int] | None = None):
+        self.ids, self.face, self.level = ids, face, level
+        self.i, self.j, self.orient = i, j, orient
+        self.faces = np.unique(face).tolist() if faces is None else faces
+        self._uv = None
+        self._vertices = None
+        self._views: list[Cell] | None = None
+
+    @staticmethod
+    def from_ids(ids) -> "Cells":
+        rows = [ck.sc_to_face_ij_orientation(c) for c in ids]
+        level = np.array([ck.sc_level(c) for c in ids], dtype=np.int64)
+        face, i, j, orient = (np.array([r[k] for r in rows], dtype=np.int64)
+                              for k in range(4))
+        size = np.left_shift(1, ck.MAX_LEVEL - level)
+        return Cells(np.array(ids, dtype=np.uint64), face, level,
+                     i & -size, j & -size, orient)
+
+    def __len__(self) -> int:
+        return len(self.ids)
+
+    @property
+    def uv(self) -> np.ndarray:
+        """(4, m): u_lo, u_hi, v_lo, v_hi (ijLevelToBoundUV)."""
+        if self._uv is None:
+            size = np.left_shift(1, ck.MAX_LEVEL - self.level)
+            i, j = self.i, self.j
+            self._uv = ck.st_to_uv(ck.ij_to_st_min(
+                np.stack((i, i + size, j, j + size))))
+        return self._uv
+
+    @property
+    def vertices(self) -> np.ndarray:
+        if self._vertices is None:
+            u_lo, u_hi, v_lo, v_hi = self.uv
+            u = np.stack((u_lo, u_hi, u_hi, u_lo), axis=1)
+            v = np.stack((v_lo, v_lo, v_hi, v_hi), axis=1)
+            out = np.empty((len(self.ids), 4, 3), dtype=np.float64)
+            for f in self.faces:
+                sel = slice(None) if len(self.faces) == 1 else self.face == f
+                x, y, z = ck._XYZ_TABLE[f](u[sel], v[sel])
+                n = np.sqrt(x * x + y * y + z * z)
+                out[sel, :, 0] = x / n
+                out[sel, :, 1] = y / n
+                out[sel, :, 2] = z / n
+            self._vertices = out
+        return self._vertices
+
+    def __iter__(self):
+        """One-cell `Cell` views, for regions with no batch predicate
+        (built once, so a cell's lazily computed vertices are too)."""
+        if self._views is None:
+            self._views = [
+                Cell(c, ck.sc_ij_bound_uv(i, j, 1 << (ck.MAX_LEVEL - lv)))
+                for c, lv, i, j in zip(self.ids.tolist(),
+                                       self.level.tolist(),
+                                       self.i.tolist(), self.j.tolist())]
+        return iter(self._views)
+
+    def take(self, sel) -> "Cells":
+        """The cells at `sel` (a mask, an index list or a slice)."""
+        out = Cells(self.ids[sel], self.face[sel], self.level[sel],
+                    self.i[sel], self.j[sel], self.orient[sel],
+                    self.faces if len(self.faces) == 1 else None)
+        if self._uv is not None:
+            out._uv = self._uv[:, sel]
+        if self._vertices is not None:
+            out._vertices = self._vertices[sel]
+        if self._views is not None:
+            out._views = [self._views[k] for k in
+                          np.arange(len(self.ids))[sel].tolist()]
+        return out
+
+    def children(self) -> "Cells":
+        """All 4m children, each cell's in Hilbert order (S2Cell.subdivide:
+        child (i, j) and orientation from kPosToIJ / kPosToOrientation).
+        Plain ints: on the coverer's 1-16-cell batches a numpy form costs
+        more in per-call overhead than this loop."""
+        cids, ci, cj, co = [], [], [], []
+        for cid, lv, i, j, o in zip(self.ids.tolist(), self.level.tolist(),
+                                    self.i.tolist(), self.j.tolist(),
+                                    self.orient.tolist()):
+            half = 1 << (ck.MAX_LEVEL - 1 - lv)
+            step = half * half              # the children's lsb
+            base = cid - 4 * step           # range_min - 1
+            for pos, ij in enumerate(POS_TO_IJ[o]):
+                cids.append(base + (2 * pos + 1) * step)
+                ci.append(i + (ij >> 1) * half)
+                cj.append(j + (ij & 1) * half)
+                co.append(o ^ POS_TO_ORIENTATION[pos])
+        return Cells(np.array(cids, dtype=np.uint64),
+                     np.repeat(self.face, 4), np.repeat(self.level + 1, 4),
+                     np.array(ci, dtype=np.int64),
+                     np.array(cj, dtype=np.int64),
+                     np.array(co, dtype=np.int64), self.faces)
+
+    def rect_bound(self, k: int) -> "LatLngRect":
+        return _cell_rect_bound(int(self.level[k]), int(self.face[k]),
+                                self.vertices[k])
+
+    def contains_point(self, p: np.ndarray) -> np.ndarray:
+        """bool[m]: `Cell.contains_point` of one point in every cell."""
+        x, y, z = float(p[0]), float(p[1]), float(p[2])
+        u_lo, u_hi, v_lo, v_hi = self.uv
+        out = np.zeros(len(self.ids), dtype=bool)
+        for f in self.faces:
+            if (x, y, z, -x, -y, -z)[f] <= 0:
+                continue
+            denom = (x, y, z)[f % 3]
+            uu = (y, -x, -x, z, z, -y)[f] / denom
+            vv = (z, z, -y, y, -x, -x)[f] / denom
+            sel = slice(None) if len(self.faces) == 1 else self.face == f
+            out[sel] = ((u_lo[sel] - DBL_EPS <= uu) &
+                        (uu <= u_hi[sel] + DBL_EPS) &
+                        (v_lo[sel] - DBL_EPS <= vv) &
+                        (vv <= v_hi[sel] + DBL_EPS))
+        return out
+
+
+class PerCellPredicates:
+    """Batch predicates as a loop over the region's one-cell
+    `may_intersect_cell` / `contains_cell`, for the regions whose test
+    has no vectorized form."""
+
+    def may_intersect_cells(self, cells: Cells) -> np.ndarray:
+        return np.fromiter((self.may_intersect_cell(c) for c in cells),
+                           dtype=bool, count=len(cells))
+
+    def contains_cells(self, cells: Cells) -> np.ndarray:
+        return np.fromiter((self.contains_cell(c) for c in cells),
+                           dtype=bool, count=len(cells))
 
 
 # ---------------------------------------------------------------------------
@@ -463,7 +625,7 @@ def _point_edge_dist_rad(p: np.ndarray, a: np.ndarray,
 # Regions
 # ---------------------------------------------------------------------------
 
-class Cap:
+class Cap(PerCellPredicates):
     """Spherical disc: center xyz + squared-chord radius
     (S2Cap.kt:77; dist2 < 0 => empty, dist2 == 4 => full)."""
 
@@ -661,7 +823,7 @@ class Cap:
         return self
 
 
-class LatLngRect:
+class LatLngRect(PerCellPredicates):
     """lat interval x wrapping lng interval, radians."""
 
     def __init__(self, lat_lo: float, lat_hi: float,
@@ -1032,10 +1194,6 @@ class LatLngRect:
                 return True
         return False
 
-    def get_hausdorff_distance(self, other: "LatLngRect") -> float:
-        return max(self.get_directed_hausdorff_distance(other),
-                   other.get_directed_hausdorff_distance(self))
-
     def get_directed_hausdorff_distance(self, other: "LatLngRect") -> float:
         """S2LatLngRect.getDirectedHausdorffDistance
         (S2LatLngRect.kt:649-660): h(A,B) = max_{p in A} min_{q in B}."""
@@ -1325,57 +1483,76 @@ class Loop:
         self._bound = b
         return b
 
-    def _boundary_crosses_cell(self, cell: Cell) -> bool:
-        """True if any loop edge may cross any cell edge — vectorized
-        triage over all (loop edge x cell edge) pairs; uncertain pairs
-        (including shared vertices) count as crossing, which is the
-        conservative direction for both contains_cell (false negatives
-        only cost covering tightness) and may_intersect_cell."""
-        cv = cell.vertices()
+    def _boundary_crosses_cells(self, verts: np.ndarray) -> np.ndarray:
+        """bool[m]: some loop edge may cross some edge of each cell
+        (verts: (m, 4, 3)) — one triage over all (loop edge x 4m cell
+        edge) pairs; uncertain pairs (including shared vertices) count as
+        crossing, which is the conservative direction for both
+        contains_cells (false negatives only cost covering tightness)
+        and may_intersect_cells."""
+        m = len(verts)
         a = self.vertices
-        b = np.roll(a, -1, axis=0)
-        c = cv
-        d = np.roll(cv, -1, axis=0)
-        n_ab = np.cross(a, b)                    # (n,3)
-        n_cd = np.cross(c, d)                    # (4,3)
+        b = pip.next_rows(a)
+        c = verts.reshape(-1, 3)
+        d = verts[:, _NEXT_CORNER].reshape(-1, 3)
+        n_ab = pip.cross_rows(a, b)              # (n,3)
+        n_cd = pip.cross_rows(c, d)              # (4m,3)
         t = pred.triage_sign_dets
-        acb = -t(n_ab @ c.T)                     # (n,4) -sign(a,b,c)
+        acb = -t(n_ab @ c.T)                     # (n,4m) -sign(a,b,c)
         bda = t(n_ab @ d.T)                      # sign(a,b,d)
         cbd = -t(b @ n_cd.T)                     # -sign(c,d,b)
         dac = t(a @ n_cd.T)                      # sign(c,d,a)
         crossing = (bda == acb) & (cbd == acb) & (dac == acb) & (acb != 0)
         uncertain = (acb == 0) | (bda == 0) | (cbd == 0) | (dac == 0)
-        return bool((crossing | uncertain).any())
+        return (crossing | uncertain).reshape(len(a), m, 4).any(axis=(0, 2))
+
+    def contains_cells(self, cells: "Cells") -> np.ndarray:
+        """bool[m]: every cell vertex inside, no boundary crossing, the
+        loop not inside the cell, and the loop's rect bound meets the
+        cell's.  The rect test (the first in S2Loop.contains(S2Cell))
+        can only turn a yes into a no, so it runs on the yeses alone."""
+        m = len(cells)
+        ok = self.contains_points(cells.vertices.reshape(-1, 3)) \
+            .reshape(m, 4).all(axis=1)
+        ok &= ~cells.contains_point(self.vertices[0])
+        if ok.any():
+            ok[ok] = ~self._boundary_crosses_cells(cells.vertices[ok])
+        bound = self.rect_bound()
+        for k in np.flatnonzero(ok).tolist():
+            rect = cells.rect_bound(k)
+            if not bound.contains_rect(rect) and \
+                    not bound.intersects_rect(rect):
+                ok[k] = False
+        return ok
+
+    def may_intersect_cells(self, cells: "Cells") -> np.ndarray:
+        """bool[m]: a cell vertex inside, the loop's first vertex in the
+        cell, or a boundary crossing — and the rect bounds meet, tested
+        on the yeses alone."""
+        m = len(cells)
+        hit = self.contains_points(cells.vertices.reshape(-1, 3)) \
+            .reshape(m, 4).any(axis=1)
+        hit |= cells.contains_point(self.vertices[0])
+        rest = ~hit
+        if rest.any():
+            hit[rest] = self._boundary_crosses_cells(cells.vertices[rest])
+        bound = self.rect_bound()
+        for k in np.flatnonzero(hit).tolist():
+            if not bound.intersects_rect(cells.rect_bound(k)):
+                hit[k] = False
+        return hit
 
     def contains_cell(self, cell: Cell) -> bool:
-        bound = self.rect_bound()
-        if not bound.contains_rect(cell.rect_bound()):
-            # cheap reject is conservative-safe for contains
-            if not bound.intersects_rect(cell.rect_bound()):
-                return False
-        cv = cell.vertices()
-        if not self.contains_points(cv).all():
-            return False
-        if self._boundary_crosses_cell(cell):
-            return False
-        # guard the loop-inside-cell case
-        return not cell.contains_point(self.vertices[0])
+        return bool(self.contains_cells(Cells.from_ids([cell.id]))[0])
 
     def may_intersect_cell(self, cell: Cell) -> bool:
-        if not self.rect_bound().intersects_rect(cell.rect_bound()):
-            return False
-        cv = cell.vertices()
-        if self.contains_points(cv).any():
-            return True
-        if cell.contains_point(self.vertices[0]):
-            return True
-        return self._boundary_crosses_cell(cell)
+        return bool(self.may_intersect_cells(Cells.from_ids([cell.id]))[0])
 
     def cap_bound(self) -> Cap:
         return self.rect_bound().cap_bound()
 
 
-class CellRegion:
+class CellRegion(PerCellPredicates):
     """A single cell as an S2Region (S2Cell.kt:510-542)."""
 
     def __init__(self, cid: int):
@@ -1504,31 +1681,39 @@ class Polygon:
             b = b.union(lp.rect_bound())
         return b
 
-    def contains_cell(self, cell: Cell) -> bool:
+    def contains_cells(self, cells: Cells) -> np.ndarray:
+        """bool[m]: all cell vertices inside, no loop boundary crossing,
+        and no loop's first vertex inside the cell (the polygon does not
+        sit inside it).  One unreversed loop is the loop's own test."""
         if len(self.loops) == 1 and not self.inverted:
-            return self.loops[0].contains_cell(cell)
-        # all cell vertices inside, no loop boundary crossing, polygon
-        # does not sit inside the cell
-        cv = cell.vertices()
-        if not self.contains_points(cv).all():
-            return False
+            return self.loops[0].contains_cells(cells)
+        m = len(cells)
+        ok = self.contains_points(cells.vertices.reshape(-1, 3)) \
+            .reshape(m, 4).all(axis=1)
         for lp in self.loops:
-            if lp._boundary_crosses_cell(cell):
-                return False
-            if cell.contains_point(lp.vertices[0]):
-                return False
-        return True
+            ok &= ~cells.contains_point(lp.vertices[0])
+        for lp in self.loops:
+            if ok.any():
+                ok[ok] = ~lp._boundary_crosses_cells(cells.vertices[ok])
+        return ok
+
+    def may_intersect_cells(self, cells: Cells) -> np.ndarray:
+        m = len(cells)
+        hit = self.contains_points(cells.vertices.reshape(-1, 3)) \
+            .reshape(m, 4).any(axis=1)
+        for lp in self.loops:
+            hit |= cells.contains_point(lp.vertices[0])
+        for lp in self.loops:
+            rest = ~hit
+            if rest.any():
+                hit[rest] = lp._boundary_crosses_cells(cells.vertices[rest])
+        return hit
+
+    def contains_cell(self, cell: Cell) -> bool:
+        return bool(self.contains_cells(Cells.from_ids([cell.id]))[0])
 
     def may_intersect_cell(self, cell: Cell) -> bool:
-        cv = cell.vertices()
-        if self.contains_points(cv).any():
-            return True
-        for lp in self.loops:
-            if cell.contains_point(lp.vertices[0]):
-                return True
-            if lp._boundary_crosses_cell(cell):
-                return True
-        return False
+        return bool(self.may_intersect_cells(Cells.from_ids([cell.id]))[0])
 
     def cap_bound(self) -> Cap:
         return self.rect_bound().cap_bound()

@@ -32,7 +32,8 @@ from .clipping import (FACE_CLIP_ERROR_UV_COORD,
                        INTERSECTS_RECT_ERROR_UV_DIST, clip_to_padded_face,
                        get_face_segments, intersects_rect)
 from .edges import cell_edge_chord2, cell_point_chord2
-from .regions import Cap, Cell, CellRegion, LatLngRect, Loop, Polygon
+from .regions import (Cap, Cell, CellRegion, LatLngRect, Loop,
+                      PerCellPredicates, Polygon)
 
 # anyEdgeIntersects error margin (S2ShapeIndexRegion.kt:247): an edge
 # within this uv distance of a cell counts as intersecting, which keeps
@@ -120,7 +121,7 @@ def _any_edge_intersects(edges, cell: Cell) -> bool:
     return False
 
 
-class GeometryRegion:
+class GeometryRegion(PerCellPredicates):
     """S2ShapeIndexRegion over one LaxGeometry collection or — matching
     the reference's multi-shape index, where containment means ANY
     shape contains the cell — a list of them."""
@@ -294,7 +295,7 @@ class GeometryRegion:
                    for q in self.geom.points)
 
 
-class BufferedGeometryRegion:
+class BufferedGeometryRegion(PerCellPredicates):
     """S2ShapeIndexBufferedRegion: GeometryRegion expanded by
     `radius` radians.  mayIntersectCell is exact to the distance
     kernels; containsCell is conservative via the circumscribed cap

@@ -41,7 +41,7 @@ from ..kernel import cellid as ck
 from ..kernel import pip
 from ..kernel.cell_index import CellIndex
 from ..kernel.coverer import RegionCoverer, content_key, expand, memoized
-from ..kernel.regions import Cell, Polygon
+from ..kernel.regions import Cells, Polygon
 from ..session import local_frame
 
 
@@ -68,12 +68,13 @@ def build_covering_rows(polygons: list[tuple[str, int, Polygon]],
         coverer = RegionCoverer(max_cells=max_cells, min_level=min_level,
                                 max_level=max_level, level_mod=level_mod)
         for layer, pid, poly in polygons:
-            for cid in coverer.get_covering(poly):
+            cells = coverer.get_covering(poly)
+            interior = poly.contains_cells(Cells.from_ids(cells))
+            for cid, inside in zip(cells, interior.tolist()):
                 rows.append((
                     layer, pid, _signed(cid), ck.sc_level(cid),
                     _signed(ck.sc_range_min(cid)),
-                    _signed(ck.sc_range_max(cid)),
-                    bool(poly.contains_cell(Cell(cid))),
+                    _signed(ck.sc_range_max(cid)), inside,
                 ))
         return rows
 
@@ -304,16 +305,14 @@ def spatial_join(pages: DataFrame, spark: SparkSession,
         meta_df = local_frame(
             spark, meta, "ref int, layer string, polygon_id long, "
                          "is_interior boolean")
-        # NOTE (r8): a scalar-seg variant (vectorized searchsorted
-        # returning one int, then a broadcast (seg -> covering row)
-        # join — no per-row Python list building, no Generate) measured
-        # only ~5% faster at sf0.1 AND exploded the optimizer tree when
-        # composed with the pure-JVM cellid pipeline (driver OOM during
-        # planning: joining on a column derived from the very large
-        # cell_id expression triggers constraint/pushdown copies of the
-        # whole tree, even with the UDF marked non-deterministic).  The
-        # explode form keeps the UDF output behind a Generate, which the
-        # optimizer does not substitute through.
+        # A scalar-seg variant (vectorized searchsorted returning one
+        # int, then a broadcast (seg -> covering row) join: no per-row
+        # Python list, no Generate) measured only ~5% faster at sf0.1
+        # in round 8, and was reverted because, over the pure-Column
+        # cell-id encode of that time, planning the join ran the driver
+        # out of memory.  That encode is gone (pages get their cell id
+        # from the Arrow `s2_cellid` in `sources.pages.geocode`), so the
+        # reason no longer holds; the variant is not yet re-measured.
         joined = (pages.withColumn("ref",
                                    F.explode(stab(F.col("cell_id"))))
                   .join(F.broadcast(meta_df), "ref", "inner"))

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import LongType
 
 from ..functions import s2_cellid
 
@@ -184,18 +186,26 @@ def geoparse(df: DataFrame) -> DataFrame:
              .withColumn("lon", F.when(has, lon))
 
 
+# `s2_cellid` as a separate UDF object marked nondeterministic
+# (asNondeterministic mutates the object it is called on, so the shared
+# `s2_cellid` stays deterministic for every other caller).
+_s2_cellid_once = pandas_udf(s2_cellid.func, LongType()).asNondeterministic()
+
+
 def geocode(df: DataFrame) -> DataFrame:
     """Geocoded pages: `geoparse`, then the leaf cell id (the Arrow
     `s2_cellid` encode), keeping only pages that got one.
 
-    The filter reads the UDF's output, which the optimizer cannot push
-    below the Python evaluation.  A `lat IS NOT NULL` filter would be
-    pushed through the synthesizer's projections with `text`
+    The filter reads the UDF's output.  A `lat IS NOT NULL` filter would
+    be pushed through the synthesizer's projections with `text`
     substituted, and the inlined expression tree then outgrows
-    whole-stage codegen's 64 KB method limit.  The price: the optimizer
-    still pushes this filter below the projection, so the plan runs the
-    encode twice, once for the filter and once for the column.
+    whole-stage codegen's 64 KB method limit.  The encode is marked
+    nondeterministic: the optimizer does not push a filter through a
+    nondeterministic projection, so the plan runs the encode once (one
+    `ArrowEvalPython`) and the filter reads its column.  A deterministic
+    encode gets the filter pushed below the projection as
+    `isnotnull(s2_cellid(lat, lon))`, and the plan runs it twice.
     """
     return (geoparse(df)
-            .withColumn("cell_id", s2_cellid("lat", "lon"))
+            .withColumn("cell_id", _s2_cellid_once("lat", "lon"))
             .where(F.col("cell_id").isNotNull()))

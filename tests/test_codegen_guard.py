@@ -27,6 +27,16 @@ def test_geocode_compiles(spark):
     assert len(geo.collect()) == 442
 
 
+def test_geocode_encodes_once(spark):
+    """The encode runs once per page: the plan holds one ArrowEvalPython,
+    whose output column the `cell_id IS NOT NULL` filter reads."""
+    from s2_geometry_kotlin_spark.sources import pages as P
+    geo = P.geocode(P.load_pages(spark, SF))
+    plan = geo._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert len(geo.collect()) == 442
+
+
 def test_registry_spatial_join_compiles(spark):
     import __spark_entry__ as e
     assert e.queries()["spatial_join"](spark, SF).collect()

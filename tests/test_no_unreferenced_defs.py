@@ -124,15 +124,42 @@ def _report(kind: str, unreferenced: list[str]) -> None:
         "\n".join(sorted(unreferenced))
 
 
+def _defs(tree):
+    """(qualified name, name) of a module's top-level functions and
+    classes and of the methods of its top-level classes."""
+    for node in tree.body:
+        if isinstance(node, _DEFS):
+            yield node.name, node.name
+        if isinstance(node, ast.ClassDef):
+            for member in node.body:
+                if isinstance(member, _DEFS):
+                    yield f"{node.name}.{member.name}", member.name
+
+
 def test_every_package_def_is_referenced():
+    """Methods count too: a per-cell helper left behind by a batched
+    predicate (say a `Loop._boundary_crosses_cell` beside
+    `_boundary_crosses_cells`) is reported like a dead function."""
     trees, refs, _ = _scan()
     scanned = dict(_package_trees())
     scanned[ENTRY] = trees[ENTRY]
     _report("defs", [
-        f"{os.path.relpath(path, ROOT)}: {node.name}"
-        for path, tree in scanned.items() for node in tree.body
-        if isinstance(node, _DEFS) and not node.name.startswith("__")
-        and not refs[node.name]])
+        f"{os.path.relpath(path, ROOT)}: {qualified}"
+        for path, tree in scanned.items()
+        for qualified, name in _defs(tree)
+        if not name.startswith("__") and not refs[name]])
+
+
+def test_a_dead_method_is_reported():
+    tree = ast.parse("class Loop:\n"
+                     "    def _boundary_crosses_cells(self): pass\n"
+                     "    def _boundary_crosses_cell(self): pass\n"
+                     "    def __init__(self): self._boundary_crosses_cells()\n"
+                     "Loop()\n")
+    refs = _references(tree)
+    dead = [q for q, name in _defs(tree)
+            if not name.startswith("__") and not refs[name]]
+    assert dead == ["Loop._boundary_crosses_cell"]
 
 
 def test_every_package_constant_is_referenced():

@@ -36,9 +36,13 @@ _FIXTURE_POINTS = [(0.0, 0.0), (0.0, 90.0), (90.0, 0.0), (0.0, 180.0),
     pytest.param(_FIXTURE_POINTS, id="fixture_points"),
     pytest.param([(None, 1.0), (1.0, None), (None, None)],
                  id="null_passthrough"),
+    pytest.param(_FIXTURE_POINTS + [(None, 1.0), (None, None)],
+                 id="nulls_beside_points"),
 ])
 def test_s2_cellid_matches_kernel(spark, pts):
-    df = spark.createDataFrame(pts, "lat double, lon double")
+    """Exact ids, nulls for null coordinates; one partition, so a batch
+    holds both (a null once turned the batch's ids into rounded floats)."""
+    df = spark.createDataFrame(pts, "lat double, lon double").coalesce(1)
     rows = df.withColumn("cid", s2f.s2_cellid("lat", "lon")).collect()
     got = {(r["lat"], r["lon"]): r["cid"] for r in rows}
     for plat, plon in pts:

@@ -100,6 +100,52 @@ def test_join_equals_numpy_kernel(spark, layer, strategy, case):
         assert expect, "the case must exercise a contained row"
 
 
+RADIUS_RAD = 100000.0 / 6371010.0   # 100 km, the registry's within_100km
+
+
+def _within_reference(layer, points, radius_rad):
+    """(url, layer, polygon_id) rows the numpy kernels put within the
+    radius: contained, or a loop edge within the chord distance."""
+    from s2_geometry_kotlin_spark.kernel import cellid as ck
+    from s2_geometry_kotlin_spark.kernel import distance as dist
+    from s2_geometry_kotlin_spark.kernel import pip
+    ok = [i for i, (la, lo) in enumerate(points) if la is not None]
+    if not ok:
+        return []
+    lat = np.array([points[i][0] for i in ok])
+    lon = np.array([points[i][1] for i in ok])
+    xyz = np.stack(ck.latlng_deg_to_xyz(lat, lon), axis=1)
+    max_d2 = float(dist.radians_to_chord2(radius_rad))
+    rows = []
+    for name, pid, poly in layer:
+        near = pip.polygon_contains_points(
+            [lp.vertices for lp in poly.loops], xyz,
+            inverted=bool(getattr(poly, "inverted", False)))
+        for lp in poly.loops:
+            v = lp.vertices
+            near |= dist.point_edge_chord2(
+                xyz, v, np.roll(v, -1, axis=0)).min(axis=1) <= max_d2
+        rows += [(f"p{ok[k]}", name, pid) for k in np.flatnonzero(near)]
+    return sorted(rows)
+
+
+@pytest.mark.parametrize("case", ["boundary", "empty", "all_null",
+                                  "one_page", "poles", "antimeridian"])
+def test_within_distance_join_equals_numpy_kernels(spark, layer, case):
+    """within_distance_join over the coverer's buffered covering returns
+    exactly the rows of the numpy containment and point-edge distance
+    kernels, on the degenerate inputs too."""
+    from s2_geometry_kotlin_spark.operators.spatial_join import \
+        within_distance_join
+    points = _inputs(layer)[case]
+    expect = _within_reference(layer, points, RADIUS_RAD)
+    got = sorted(tuple(r) for r in within_distance_join(
+        _pages(spark, points), spark, layer, RADIUS_RAD).collect())
+    assert got == expect
+    if case in ("boundary", "one_page", "poles", "antimeridian"):
+        assert expect, "the case must exercise a row within the radius"
+
+
 @pytest.mark.parametrize("verify", ["sql", "SQL", "Kernel", ""])
 def test_unknown_verify_raises(spark, layer, verify):
     from s2_geometry_kotlin_spark.operators.spatial_join import spatial_join
