@@ -448,13 +448,14 @@ def bound_uv(ids):
     ids = np.atleast_1d(_as_u64(ids))
     face, i, j = to_face_ij_orientation(ids)
     size = get_size_ij(level(ids))
-    i_lo = i & -size
-    j_lo = j & -size
-    u_lo = st_to_uv(ij_to_st_min(i_lo))
-    u_hi = st_to_uv(ij_to_st_min(i_lo + size))
-    v_lo = st_to_uv(ij_to_st_min(j_lo))
-    v_hi = st_to_uv(ij_to_st_min(j_lo + size))
-    return u_lo, u_hi, v_lo, v_hi
+    return ij_bound_uv(i & -size, j & -size, size)
+
+
+def ij_bound_uv(i_lo, j_lo, size) -> np.ndarray:
+    """(4, n): u_lo, u_hi, v_lo, v_hi of the cells whose lower-left leaf
+    is (i_lo, j_lo) and whose side is `size` leaves."""
+    return st_to_uv(ij_to_st_min(np.array((i_lo, i_lo + size,
+                                           j_lo, j_lo + size))))
 
 
 def cell_vertices(ids) -> np.ndarray:
@@ -462,15 +463,34 @@ def cell_vertices(ids) -> np.ndarray:
     (S2Cell.getVertex: lower-left, lower-right, upper-right, upper-left)."""
     ids = np.atleast_1d(_as_u64(ids))
     face = (ids >> _U(POS_BITS)).astype(np.int64)
-    u_lo, u_hi, v_lo, v_hi = bound_uv(ids)
-    out = np.empty((len(ids), 4, 3), dtype=np.float64)
-    corners = [(u_lo, v_lo), (u_hi, v_lo), (u_hi, v_hi), (u_lo, v_hi)]
-    for k, (uu, vv) in enumerate(corners):
-        x, y, z = face_uv_to_xyz(face, uu, vv)
+    return uv_cell_vertices(face, bound_uv(ids))
+
+
+def face_groups(face: np.ndarray) -> list:
+    """(face, selector) for each face present in `face`; one
+    (face, slice(None)) when all the cells share a face."""
+    if not len(face):
+        return []
+    f0 = int(face[0])
+    if (face == f0).all():
+        return [(f0, slice(None))]
+    return [(f, face == f) for f in np.unique(face).tolist()]
+
+
+def uv_cell_vertices(face: np.ndarray, uv) -> np.ndarray:
+    """`cell_vertices` from each cell's face and (4, n) uv bounds.  The
+    face table is evaluated once per face present (the region coverer's
+    batches share one face), which keeps a batch of a few cells cheap."""
+    uv = np.asarray(uv)
+    u = uv[[0, 1, 1, 0]].T          # (n, 4), corner by corner
+    v = uv[[2, 2, 3, 3]].T
+    out = np.empty((len(face), 4, 3), dtype=np.float64)
+    for f, sel in face_groups(face):
+        x, y, z = _XYZ_TABLE[f](u[sel], v[sel])
         n = np.sqrt(x * x + y * y + z * z)
-        out[:, k, 0] = x / n
-        out[:, k, 1] = y / n
-        out[:, k, 2] = z / n
+        out[sel, :, 0] = x / n
+        out[sel, :, 1] = y / n
+        out[sel, :, 2] = z / n
     return out
 
 

@@ -34,12 +34,15 @@ def next_rows(x: np.ndarray, axis: int = 0) -> np.ndarray:
 
 
 def cross_rows(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Row-wise a x b of (n, 3) arrays: np.cross's arithmetic, operation
-    for operation (so the same bits), without its per-call overhead."""
-    out = np.empty(np.broadcast_shapes(a.shape, b.shape))
-    out[:, 0] = a[:, 1] * b[:, 2] - a[:, 2] * b[:, 1]
-    out[:, 1] = a[:, 2] * b[:, 0] - a[:, 0] * b[:, 2]
-    out[:, 2] = a[:, 0] * b[:, 1] - a[:, 1] * b[:, 0]
+    """Row-wise a x b of (n, 3) arrays, or of an (n, 3) array and one
+    3-vector: np.cross's arithmetic, operation for operation (so the
+    same bits), without its per-call overhead."""
+    a0, a1, a2 = a[..., 0], a[..., 1], a[..., 2]
+    b0, b1, b2 = b[..., 0], b[..., 1], b[..., 2]
+    out = np.empty(a.shape if a.ndim >= b.ndim else b.shape)
+    out[..., 0] = a1 * b2 - a2 * b1
+    out[..., 1] = a2 * b0 - a0 * b2
+    out[..., 2] = a0 * b1 - a1 * b0
     return out
 
 

@@ -1,9 +1,10 @@
 """Region types implementing the S2Region contract used by the coverer
 (SURVEY.md §1.2): cap_bound, may_intersect_cell, contains_cell,
 contains_point, and the batch forms may_intersect_cells / contains_cells
-over a `Cells` batch.  Loop and Polygon answer a batch with one numpy
-pass per loop, and their one-cell predicates are batches of one; the
-other regions loop over their one-cell predicates (`PerCellPredicates`).
+over a `Cells` batch.  Cap, Loop and Polygon answer a batch with numpy
+passes over all its cells (per loop, for a polygon), and their one-cell
+predicates are batches of one; the other regions loop over their
+one-cell predicates (`PerCellPredicates`).
 
 These run driver-side over polygon *layers* (small); the per-page hot path
 never touches them — it goes through the exploded covering DataFrame and
@@ -36,22 +37,39 @@ DBL_EPS = 2.220446049250313e-16
 # Cell geometry: one cell (Cell) and a batch of cells (Cells)
 # ---------------------------------------------------------------------------
 
-_UNORM = [
-    lambda u: np.array([u, -1.0, 0.0]),
-    lambda u: np.array([1.0, u, 0.0]),
-    lambda u: np.array([1.0, 0.0, u]),
-    lambda u: np.array([-u, 0.0, 1.0]),
-    lambda u: np.array([0.0, -u, 1.0]),
-    lambda u: np.array([0.0, -1.0, -u]),
-]
-_VNORM = [
-    lambda v: np.array([-v, 0.0, 1.0]),
-    lambda v: np.array([0.0, -v, 1.0]),
-    lambda v: np.array([0.0, -1.0, -v]),
-    lambda v: np.array([v, -1.0, 0.0]),
-    lambda v: np.array([1.0, v, 0.0]),
-    lambda v: np.array([1.0, 0.0, v]),
-]
+# A cell's inward edge normals (S2Cell.getEdgeRaw: vNorm(v_lo),
+# uNorm(u_hi), -vNorm(v_hi), -uNorm(u_lo)) as coef * t + offset per
+# face and edge, t the edge's uv value (v_lo, u_hi, v_hi, u_lo).  Every
+# coefficient is 0 or +-1, so the normals are exact.
+_UNORM_COEF = [[1, 0, 0], [0, 1, 0], [0, 0, 1],
+               [-1, 0, 0], [0, -1, 0], [0, 0, -1]]
+_UNORM_OFFSET = [[0, -1, 0], [1, 0, 0], [1, 0, 0],
+                 [0, 0, 1], [0, 0, 1], [0, -1, 0]]
+_VNORM_COEF = [[-1, 0, 0], [0, -1, 0], [0, 0, -1],
+               [1, 0, 0], [0, 1, 0], [0, 0, 1]]
+_VNORM_OFFSET = [[0, 0, 1], [0, 0, 1], [0, -1, 0],
+                 [0, -1, 0], [1, 0, 0], [1, 0, 0]]
+_EDGE_COEF = np.array([[_VNORM_COEF[f], _UNORM_COEF[f],
+                        np.negative(_VNORM_COEF[f]),
+                        np.negative(_UNORM_COEF[f])] for f in range(6)],
+                      dtype=np.float64)                      # (6, 4, 3)
+_EDGE_OFFSET = np.array([[_VNORM_OFFSET[f], _UNORM_OFFSET[f],
+                          np.negative(_VNORM_OFFSET[f]),
+                          np.negative(_UNORM_OFFSET[f])] for f in range(6)],
+                        dtype=np.float64)
+# each edge's uv value, as rows of a (4, m) uv-bounds array
+_EDGE_UV_ROW = [2, 1, 3, 0]
+
+
+def _face_uv(p: np.ndarray, face: int) -> tuple[float, float] | None:
+    """p projected onto `face` (validFaceXyzToUv: divide by the raw
+    signed component), or None when p is on the face's back hemisphere."""
+    x, y, z = float(p[0]), float(p[1]), float(p[2])
+    if (x, y, z, -x, -y, -z)[face] <= 0:
+        return None
+    denom = (x, y, z)[face % 3]
+    return ((y, -x, -x, z, z, -y)[face] / denom,
+            (z, z, -y, y, -x, -x)[face] / denom)
 
 
 class Cell:
@@ -81,28 +99,12 @@ class Cell:
     def center(self) -> np.ndarray:
         return np.array(ck.sc_center_xyz(self.id))
 
-    def edge_raw(self, k: int) -> np.ndarray:
-        """Inward-facing normal of edge k (S2Cell.kt:129-135)."""
-        if k == 0:
-            return _VNORM[self.face](self.v_lo)
-        if k == 1:
-            return _UNORM[self.face](self.u_hi)
-        if k == 2:
-            return -_VNORM[self.face](self.v_hi)
-        return -_UNORM[self.face](self.u_lo)
-
     def contains_point(self, p: np.ndarray) -> bool:
         """Closed-set uv test expanded by eps (S2Cell.kt:528-542)."""
-        # project p onto this cell's face; None if on back hemisphere
-        x, y, z = float(p[0]), float(p[1]), float(p[2])
-        if (x, y, z, -x, -y, -z)[self.face] <= 0:
+        uv = _face_uv(p, self.face)
+        if uv is None:
             return False
-        # project onto this face (validFaceXyzToUv table, divide by the raw
-        # signed component)
-        denom = (x, y, z)[self.face % 3]
-        u_num = {0: y, 1: -x, 2: -x, 3: z, 4: z, 5: -y}[self.face]
-        v_num = {0: z, 1: z, 2: -y, 3: y, 4: -x, 5: -x}[self.face]
-        uu, vv = u_num / denom, v_num / denom
+        uu, vv = uv
         return (self.u_lo - DBL_EPS <= uu <= self.u_hi + DBL_EPS and
                 self.v_lo - DBL_EPS <= vv <= self.v_hi + DBL_EPS)
 
@@ -157,19 +159,16 @@ class Cells:
     """A batch of m cells as arrays, the vectorized `Cell`: ids (uint64),
     faces, levels, and each cell's lower-left (i, j) and Hilbert
     orientation (for `children`).  The uv bounds and the (m, 4, 3) CCW
-    vertices are computed on first use, with one `_XYZ_TABLE` call per
-    face present (the coverer's batches share one face) and the scalar
-    Cell's arithmetic, so every value equals `Cell`'s bit for bit."""
+    vertices come from `cellid.ij_bound_uv` / `uv_cell_vertices` on
+    first use; they equal `Cell`'s bit for bit."""
 
-    __slots__ = ("ids", "face", "level", "i", "j", "orient", "faces",
+    __slots__ = ("ids", "face", "level", "i", "j", "orient",
                  "_uv", "_vertices", "_views")
 
     def __init__(self, ids: np.ndarray, face: np.ndarray, level: np.ndarray,
-                 i: np.ndarray, j: np.ndarray, orient: np.ndarray,
-                 faces: list[int] | None = None):
+                 i: np.ndarray, j: np.ndarray, orient: np.ndarray):
         self.ids, self.face, self.level = ids, face, level
         self.i, self.j, self.orient = i, j, orient
-        self.faces = np.unique(face).tolist() if faces is None else faces
         self._uv = None
         self._vertices = None
         self._views: list[Cell] | None = None
@@ -191,28 +190,21 @@ class Cells:
     def uv(self) -> np.ndarray:
         """(4, m): u_lo, u_hi, v_lo, v_hi (ijLevelToBoundUV)."""
         if self._uv is None:
-            size = np.left_shift(1, ck.MAX_LEVEL - self.level)
-            i, j = self.i, self.j
-            self._uv = ck.st_to_uv(ck.ij_to_st_min(
-                np.stack((i, i + size, j, j + size))))
+            self._uv = ck.ij_bound_uv(
+                self.i, self.j, np.left_shift(1, ck.MAX_LEVEL - self.level))
         return self._uv
 
     @property
     def vertices(self) -> np.ndarray:
         if self._vertices is None:
-            u_lo, u_hi, v_lo, v_hi = self.uv
-            u = np.stack((u_lo, u_hi, u_hi, u_lo), axis=1)
-            v = np.stack((v_lo, v_lo, v_hi, v_hi), axis=1)
-            out = np.empty((len(self.ids), 4, 3), dtype=np.float64)
-            for f in self.faces:
-                sel = slice(None) if len(self.faces) == 1 else self.face == f
-                x, y, z = ck._XYZ_TABLE[f](u[sel], v[sel])
-                n = np.sqrt(x * x + y * y + z * z)
-                out[sel, :, 0] = x / n
-                out[sel, :, 1] = y / n
-                out[sel, :, 2] = z / n
-            self._vertices = out
+            self._vertices = ck.uv_cell_vertices(self.face, self.uv)
         return self._vertices
+
+    def edge_normals(self) -> np.ndarray:
+        """(m, 4, 3): each cell's inward edge normals, edge k running
+        from vertex k to k+1 (S2Cell.getEdgeRaw)."""
+        t = self.uv[_EDGE_UV_ROW].T[:, :, None]
+        return t * _EDGE_COEF[self.face] + _EDGE_OFFSET[self.face]
 
     def __iter__(self):
         """One-cell `Cell` views, for regions with no batch predicate
@@ -228,8 +220,7 @@ class Cells:
     def take(self, sel) -> "Cells":
         """The cells at `sel` (a mask, an index list or a slice)."""
         out = Cells(self.ids[sel], self.face[sel], self.level[sel],
-                    self.i[sel], self.j[sel], self.orient[sel],
-                    self.faces if len(self.faces) == 1 else None)
+                    self.i[sel], self.j[sel], self.orient[sel])
         if self._uv is not None:
             out._uv = self._uv[:, sel]
         if self._vertices is not None:
@@ -249,10 +240,8 @@ class Cells:
                                     self.i.tolist(), self.j.tolist(),
                                     self.orient.tolist()):
             half = 1 << (ck.MAX_LEVEL - 1 - lv)
-            step = half * half              # the children's lsb
-            base = cid - 4 * step           # range_min - 1
             for pos, ij in enumerate(POS_TO_IJ[o]):
-                cids.append(base + (2 * pos + 1) * step)
+                cids.append(ck.sc_child(cid, pos))
                 ci.append(i + (ij >> 1) * half)
                 cj.append(j + (ij & 1) * half)
                 co.append(o ^ POS_TO_ORIENTATION[pos])
@@ -260,7 +249,7 @@ class Cells:
                      np.repeat(self.face, 4), np.repeat(self.level + 1, 4),
                      np.array(ci, dtype=np.int64),
                      np.array(cj, dtype=np.int64),
-                     np.array(co, dtype=np.int64), self.faces)
+                     np.array(co, dtype=np.int64))
 
     def rect_bound(self, k: int) -> "LatLngRect":
         return _cell_rect_bound(int(self.level[k]), int(self.face[k]),
@@ -268,16 +257,13 @@ class Cells:
 
     def contains_point(self, p: np.ndarray) -> np.ndarray:
         """bool[m]: `Cell.contains_point` of one point in every cell."""
-        x, y, z = float(p[0]), float(p[1]), float(p[2])
         u_lo, u_hi, v_lo, v_hi = self.uv
         out = np.zeros(len(self.ids), dtype=bool)
-        for f in self.faces:
-            if (x, y, z, -x, -y, -z)[f] <= 0:
+        for f, sel in ck.face_groups(self.face):
+            uv = _face_uv(p, f)
+            if uv is None:
                 continue
-            denom = (x, y, z)[f % 3]
-            uu = (y, -x, -x, z, z, -y)[f] / denom
-            vv = (z, z, -y, y, -x, -x)[f] / denom
-            sel = slice(None) if len(self.faces) == 1 else self.face == f
+            uu, vv = uv
             out[sel] = ((u_lo[sel] - DBL_EPS <= uu) &
                         (uu <= u_hi[sel] + DBL_EPS) &
                         (v_lo[sel] - DBL_EPS <= vv) &
@@ -625,7 +611,7 @@ def _point_edge_dist_rad(p: np.ndarray, a: np.ndarray,
 # Regions
 # ---------------------------------------------------------------------------
 
-class Cap(PerCellPredicates):
+class Cap:
     """Spherical disc: center xyz + squared-chord radius
     (S2Cap.kt:77; dist2 < 0 => empty, dist2 == 4 => full)."""
 
@@ -780,44 +766,47 @@ class Cap(PerCellPredicates):
         d2 = self.radius2
         return d2 * (1.0 - 0.25 * d2)
 
-    def _intersects(self, cell: Cell, vertices: np.ndarray) -> bool:
-        """Cap intersects cell, given no cell vertex is inside the cap
-        (S2Cap.kt:419-466)."""
-        if self.radius2 >= 2.0:  # >= 90 degrees
-            return False
-        if self.is_empty():
-            return False
-        if cell.contains_point(self.center):
-            return True
-        sin2_angle = self._sin2()
-        for k in range(4):
-            edge = cell.edge_raw(k)
-            dot = float(self.center @ edge)
-            if dot > 0:
-                continue
-            if dot * dot > sin2_angle * float(edge @ edge):
-                return False
-            # great circle through edge intersects cap; check the closest
-            # point on the edge lies within the edge's arc
-            dir_ = np.cross(edge, self.center)
-            if float(dir_ @ vertices[k]) < 0 and \
-                    float(dir_ @ vertices[(k + 1) & 3]) > 0:
-                return True
-        return False
+    def _contains_vertices(self, cells: Cells) -> np.ndarray:
+        """bool[m, 4]: which cell vertices lie in the cap."""
+        d = self.center - cells.vertices
+        return (d * d).sum(axis=2) <= self.radius2
+
+    def _intersects_cells(self, cells: Cells) -> np.ndarray:
+        """bool[m]: the cap intersects the cell, for the cells with no
+        vertex inside the cap (S2Cap.kt:419-466).  A cell's edges are
+        tested in order, and the first that decides, decides."""
+        m = len(cells)
+        if self.radius2 >= 2.0 or self.is_empty():  # >= 90 degrees
+            return np.zeros(m, dtype=bool)
+        c = self.center
+        verts = cells.vertices
+        edge = cells.edge_normals()                         # (m, 4, 3)
+        dot = (edge * c).sum(axis=2)                        # (m, 4)
+        facing = dot <= 0
+        # the edge's great circle misses the cap: no intersection
+        miss = facing & (dot * dot > self._sin2() * (edge * edge).sum(axis=2))
+        # it meets the cap: is the closest point within the edge's arc?
+        dir_ = pip.cross_rows(edge.reshape(-1, 3), c).reshape(m, 4, 3)
+        hit = facing & ~miss & ((dir_ * verts).sum(axis=2) < 0) & \
+            ((dir_ * verts[:, _NEXT_CORNER]).sum(axis=2) > 0)
+        first = (miss | hit).argmax(axis=1)
+        return cells.contains_point(c) | hit[np.arange(m), first]
+
+    def contains_cells(self, cells: Cells) -> np.ndarray:
+        """bool[m]: all four vertices inside, and the complement cap
+        does not reach into the cell."""
+        return self._contains_vertices(cells).all(axis=1) & \
+            ~self.complement()._intersects_cells(cells)
+
+    def may_intersect_cells(self, cells: Cells) -> np.ndarray:
+        return self._contains_vertices(cells).any(axis=1) | \
+            self._intersects_cells(cells)
 
     def contains_cell(self, cell: Cell) -> bool:
-        vertices = cell.vertices()
-        for k in range(4):
-            if not self.contains_point(vertices[k]):
-                return False
-        return not self.complement()._intersects(cell, vertices)
+        return bool(self.contains_cells(Cells.from_ids([cell.id]))[0])
 
     def may_intersect_cell(self, cell: Cell) -> bool:
-        vertices = cell.vertices()
-        for k in range(4):
-            if self.contains_point(vertices[k]):
-                return True
-        return self._intersects(cell, vertices)
+        return bool(self.may_intersect_cells(Cells.from_ids([cell.id]))[0])
 
     def cap_bound(self) -> "Cap":
         return self

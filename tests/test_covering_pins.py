@@ -12,10 +12,14 @@ covering_pins.json holds, computed with the per-cell coverer:
   above and of every fixture polygon over a fixed cell set: all cells
   of levels 0-2 and the children of every clamped fixture covering
   cell.  The corner-drawn loops put loop vertices on cell edges and
-  corners of that set, where the boundary triage is uncertain.
+  corners of that set, where the boundary triage is uncertain;
+- `cap_cases`: seeded caps of 2 m to 60 km around random centers, the
+  kind the kNN probe and the per-edge coverings build, each with its
+  get_covering (max_cells 8, level_mod 2) and the flags of its
+  covering cells' children, which straddle the cap's edge.
 
 Regenerate with `PYTHONPATH=. python tests/test_covering_pins.py` from
-the repo root; it rewrites only these three keys.
+the repo root; it rewrites only these four keys.
 """
 
 import json
@@ -165,6 +169,26 @@ def _scalar_flags(regions, cells):
     return out
 
 
+def _cap_cases():
+    rng = np.random.default_rng(20261022)
+    cov = RegionCoverer(max_cells=8, level_mod=2)
+    out = []
+    for _ in range(60):
+        p = rng.normal(size=3)
+        p /= np.linalg.norm(p)
+        r2 = float(10.0 ** rng.uniform(-13, -4))
+        cap = Cap(p, r2)
+        cells = cov.get_covering(cap)
+        kids = [ck.sc_child(c, pos) for c in cells for pos in range(4)]
+        views = [Cell(c) for c in kids]
+        out.append({
+            "center": p.tolist(), "radius2": r2,
+            "covering": [_signed(c) for c in cells],
+            "may": _hex([cap.may_intersect_cell(v) for v in views]),
+            "contains": _hex([cap.contains_cell(v) for v in views])})
+    return out
+
+
 def _fixture_rows():
     from s2_geometry_kotlin_spark.operators.spatial_join import \
         build_covering_rows
@@ -187,6 +211,7 @@ def write_pins() -> None:
     pins["cell_flags"] = {
         "cells": [_signed(c) for c in cells],
         "regions": _scalar_flags(_flag_regions(fixture_cells), cells)}
+    pins["cap_cases"] = _cap_cases()
     with open(PINS_PATH, "w") as f:
         json.dump(pins, f)
 
@@ -264,6 +289,21 @@ def test_scalar_flags_match_pins(pins, fixture_cells):
             assert region.may_intersect_cell(cell) == bool(may[k]), \
                 (name, k)
             assert region.contains_cell(cell) == bool(con[k]), (name, k)
+
+
+def test_cap_cases_match_pins(pins):
+    """Caps answer a batch with their own vectorized predicates, so
+    their coverings and flags are pinned apart from the shared cases."""
+    from s2_geometry_kotlin_spark.kernel.regions import Cells
+    cov = RegionCoverer(max_cells=8, level_mod=2)
+    for k, case in enumerate(pins["cap_cases"]):
+        cap = Cap(np.array(case["center"]), case["radius2"])
+        cells = cov.get_covering(cap)
+        assert [_signed(c) for c in cells] == case["covering"], k
+        kids = Cells.from_ids([ck.sc_child(c, pos)
+                               for c in cells for pos in range(4)])
+        assert _hex(cap.may_intersect_cells(kids)) == case["may"], k
+        assert _hex(cap.contains_cells(kids)) == case["contains"], k
 
 
 if __name__ == "__main__":
