@@ -291,7 +291,8 @@ class RegionCoverer:
 # at sf0.001 make 24 distinct keys holding 4.9 MB, from 7.6 KB (a
 # 3-point kNN batch) to 2.6 MB (a 12,288-cell layer).  A layer
 # covering costs 0.09-2.2 s to build (the fixture layer: 946 cells,
-# 200 KB, 1.2 s), a per-edge cap covering 1.7-2.2 s.  A two-round kNN
+# 200 KB, 1.0-1.4 s), a per-edge cap covering of the fixture layer
+# 1.2-2.6 s (530 caps, radii 0 to 100 km).  A two-round kNN
 # call on a 24-point batch adds two keys that cost 0.3 s to rebuild;
 # 256 of them hold 12.7 MB (tracemalloc).  With 256 entries a layer
 # covering survives 127 such calls on distinct batches between two

@@ -37,26 +37,34 @@ DBL_EPS = 2.220446049250313e-16
 # Cell geometry: one cell (Cell) and a batch of cells (Cells)
 # ---------------------------------------------------------------------------
 
+_UNORM = [
+    lambda u: np.array([u, -1.0, 0.0]),
+    lambda u: np.array([1.0, u, 0.0]),
+    lambda u: np.array([1.0, 0.0, u]),
+    lambda u: np.array([-u, 0.0, 1.0]),
+    lambda u: np.array([0.0, -u, 1.0]),
+    lambda u: np.array([0.0, -1.0, -u]),
+]
+_VNORM = [
+    lambda v: np.array([-v, 0.0, 1.0]),
+    lambda v: np.array([0.0, -v, 1.0]),
+    lambda v: np.array([0.0, -1.0, -v]),
+    lambda v: np.array([v, -1.0, 0.0]),
+    lambda v: np.array([1.0, v, 0.0]),
+    lambda v: np.array([1.0, 0.0, v]),
+]
 # A cell's inward edge normals (S2Cell.getEdgeRaw: vNorm(v_lo),
 # uNorm(u_hi), -vNorm(v_hi), -uNorm(u_lo)) as coef * t + offset per
 # face and edge, t the edge's uv value (v_lo, u_hi, v_hi, u_lo).  Every
 # coefficient is 0 or +-1, so the normals are exact.
-_UNORM_COEF = [[1, 0, 0], [0, 1, 0], [0, 0, 1],
-               [-1, 0, 0], [0, -1, 0], [0, 0, -1]]
-_UNORM_OFFSET = [[0, -1, 0], [1, 0, 0], [1, 0, 0],
-                 [0, 0, 1], [0, 0, 1], [0, -1, 0]]
-_VNORM_COEF = [[-1, 0, 0], [0, -1, 0], [0, 0, -1],
-               [1, 0, 0], [0, 1, 0], [0, 0, 1]]
-_VNORM_OFFSET = [[0, 0, 1], [0, 0, 1], [0, -1, 0],
-                 [0, -1, 0], [1, 0, 0], [1, 0, 0]]
-_EDGE_COEF = np.array([[_VNORM_COEF[f], _UNORM_COEF[f],
-                        np.negative(_VNORM_COEF[f]),
-                        np.negative(_UNORM_COEF[f])] for f in range(6)],
-                      dtype=np.float64)                      # (6, 4, 3)
-_EDGE_OFFSET = np.array([[_VNORM_OFFSET[f], _UNORM_OFFSET[f],
-                          np.negative(_VNORM_OFFSET[f]),
-                          np.negative(_UNORM_OFFSET[f])] for f in range(6)],
-                        dtype=np.float64)
+_EDGE_SIGNS = (1.0, 1.0, -1.0, -1.0)
+_EDGE_NORMS = (_VNORM, _UNORM, _VNORM, _UNORM)
+_EDGE_COEF = np.array([[sign * (norm[f](1.0) - norm[f](0.0))
+                        for sign, norm in zip(_EDGE_SIGNS, _EDGE_NORMS)]
+                       for f in range(6)])                   # (6, 4, 3)
+_EDGE_OFFSET = np.array([[sign * norm[f](0.0)
+                          for sign, norm in zip(_EDGE_SIGNS, _EDGE_NORMS)]
+                         for f in range(6)])
 # each edge's uv value, as rows of a (4, m) uv-bounds array
 _EDGE_UV_ROW = [2, 1, 3, 0]
 
